@@ -43,10 +43,7 @@ from claims_data_spark.operators.dedup import (
     simhash_near_dup_pairs,
     simhash_near_dup_pairs_portable,
 )
-from claims_data_spark.operators.dense_id import (
-    dense_global_id,
-    dense_rank_inline,
-)
+from claims_data_spark.operators.dense_id import dense_global_id
 from claims_data_spark.operators.episodes import episode_table
 from claims_data_spark.operators.intervals import (
     collapse_islands,
@@ -1296,14 +1293,13 @@ FROM e GROUP BY 1, 2, 3, 4
 
 def q_dense_global(spark, sf_dir):
     """W5: warehouse-wide dense event ids without the single-task
-    funnel of an un-partitioned DENSE_RANK. Uses the inline one-pass
-    form (one range exchange + one Arrow pass on the rows) — for a
-    standalone ranking where key grain ~ row grain it strictly beats
-    the keys-map form (`dense_global_id`, kept for keys << rows)."""
+    funnel of an un-partitioned DENSE_RANK: one range exchange plus
+    one Arrow running-count pass on the rows, with per-partition
+    prefix offsets."""
     o = _t(spark, sf_dir, "orders").withColumn(
         "d", F.col("o_orderdate").cast("date")
     )
-    with_id = dense_rank_inline(
+    with_id = dense_global_id(
         o.select("o_orderkey", "o_custkey", "d"),
         order_cols=["o_custkey", "d"],
         out_col="event_seq_id",

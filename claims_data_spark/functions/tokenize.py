@@ -55,12 +55,3 @@ def wordpiece_tokens(
     toks = F.regexp_extract_all(c, F.lit(compile_wordpiece_pattern(vocab)), 1)
     return F.filter(toks, lambda t: F.trim(t) != F.lit(""))
 
-
-def wordpiece_count(
-    text_col: Column | str,
-    vocab: list[str],
-    lowercase: bool = True,
-) -> Column:
-    """Subword token count under the vocab — the budget unit for
-    packing/chunking when whitespace counts are too coarse."""
-    return F.size(wordpiece_tokens(text_col, vocab, lowercase))

@@ -5,189 +5,61 @@ The reference assigns warehouse-wide event ids with
 (``load_stage.mcaid_claim_header.R:865-967``). On Spark that funnels
 the whole table through ONE task; fine at 60k rows, fatal at 100 TB.
 
-``dense_global_id`` keeps the same semantics (dense, 1-based, ordered
-by the given columns) with a two-phase plan:
+Both functions here keep the same semantics (dense, 1-based, ordered
+by the key columns) with ONE algorithm, applied to the rows directly:
 
-1. distinct key tuples (partial-aggregated map-side; the distinct set
-   is orders of magnitude smaller than the fact table),
-2. range-repartition by the key order so partitions are themselves
-   ordered,
-3. per-partition ``row_number`` (parallel windows), plus a prefix-sum
-   of per-partition counts (only #partitions integers ever reach the
-   driver) as offsets,
-4. broadcast the tiny key->id map back onto the fact rows.
+1. one range exchange by the key order, so partitions are themselves
+   ordered, then a sort within each partition;
+2. one Arrow pass per partition: the running count of key changes is
+   the dense rank within the partition (numpy cumsums, O(1) state
+   carried between record batches);
+3. per-partition totals -> prefix-sum offsets (one integer per
+   partition reaches the driver), folded back as a literal lookup.
+
+``dense_global_id`` ranks arbitrary key tuples;
+``dense_event_ids_inline`` mints several flagged (person, date) id
+families and gap-chained episode families in the same single pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _lazy_checkpoint(df: DataFrame) -> DataFrame:
-    """``localCheckpoint(eager=False)`` that is ACTUALLY lazy.
+def _offset_ids(ranked: DataFrame, loc_names: list[str]) -> list[Column]:
+    """Global ids from per-partition running counts: one long column
+    per ``loc_names`` entry, the row's local count plus the totals of
+    every earlier partition.
 
-    Under adaptive execution, converting a plan to an RDD (which
-    checkpointing does at call time) materializes every shuffle query
-    stage immediately — a builder that mints id families mid-plan then
-    runs a serial cascade of blocking stage jobs at DataFrame-BUILD
-    time, before any action. Planning the checkpointed subtree with
-    AQE off keeps the conversion a pure plan-to-RDD mapping, so the
-    whole subtree executes inside the caller's first real action (and
-    the checkpointed RDD still truncates lineage for everything
-    downstream). The subtree loses AQE's runtime coalescing — it is a
-    keys-sized frame with an explicit range partitioning, which is
-    exactly the case where the static plan is already right."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def _eager_checkpoint(df: DataFrame) -> DataFrame:
-    """``localCheckpoint(eager=True)`` executed with AQE disabled.
-
-    Three effects, all wanted for the small/bounded frames the minting
-    pipeline stabilizes: (1) the subtree runs as ONE statically-planned
-    job instead of an AQE stage-per-shuffle cascade; (2) downstream
-    consumers read materialized blocks, so concurrent AQE leaf stages
-    can't race to recompute the same partitions (per-partition cache
-    locks make racing stages redo the whole upstream — measured as N
-    identical full-cost jobs); (3) lineage truncates, keeping chained
-    builder plans and planning time bounded. The trade (a lost
-    executor costs a job retry) is the documented one for keys-sized
-    frames."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def _stable_ranked(
-    ranked: DataFrame, truncate_lineage: bool, cache_registry: list | None
-) -> DataFrame:
-    """Stabilize the ranked-keys frame for its two consumers (offsets
-    subplan + final join).
-
-    ``truncate_lineage=True`` (default): lazy localCheckpoint — cuts
-    the logical plan so CHAINED builders (header -> combined layer,
-    each minting several id families) don't grow multiplicative plan
-    trees until planning OOMs. Even with AQE disabled for the subtree
-    (see ``_lazy_checkpoint``), instantiating the checkpoint RDD makes
-    the range partitioner sample its boundaries eagerly, so the keys
-    upstream executes at build time.
-
-    ``truncate_lineage=False``: plain persist — the whole dense-id
-    plan stays lazy (zero jobs until the caller's first action) and
-    both consumers read the cache. Right for a STANDALONE builder
-    whose plan is bounded; wrong for deep builder chains."""
-    if truncate_lineage:
-        return _lazy_checkpoint(ranked)
-    out = ranked.persist()
-    if cache_registry is not None:
-        cache_registry.append(out)
-    return out
+    Each running count is monotone, so its per-partition max is the
+    partition's total. The totals frame is one row per physical
+    partition — bounded metadata — so it is collected (a JVM-side
+    partial max over the checkpointed blocks) and the prefix-sum
+    offsets fold back as literal array lookups on ``_pid``: the id
+    attachment stays map-only, with no offsets shuffle and no
+    broadcast-join stage."""
+    totals = {
+        r["_pid"]: r[1:]
+        for r in ranked.groupBy("_pid")
+        .agg(*[F.max(c) for c in loc_names])
+        .collect()
+    }
+    n_parts = (max(totals) + 1) if totals else 0
+    ids = []
+    for j, c in enumerate(loc_names):
+        offs, acc = [], 0
+        for p in range(n_parts):
+            offs.append(acc)
+            acc += totals[p][j] if p in totals else 0
+        off_arr = F.array(*[F.lit(v).cast("long") for v in offs])
+        ids.append(
+            (F.col(c) + F.element_at(off_arr, F.col("_pid") + 1)).cast("long")
+        )
+    return ids
 
 
 def dense_global_id(
-    df: DataFrame,
-    order_cols: list[str],
-    out_col: str = "global_id",
-    num_partitions: int | None = None,
-    persist_input: bool = False,
-    cache_registry: list | None = None,
-    truncate_lineage: bool = True,
-) -> DataFrame:
-    """Attach a globally dense 1-based id ordered by ``order_cols``.
-
-    ``persist_input=True`` caches ``df`` across the offsets job and the
-    final join — use it when ``df`` is an already-reduced frame (e.g.
-    collapsed episodes) whose upstream plan is expensive. Leave False
-    for warehouse-scale inputs: caching 100 TB to save one columnar
-    re-scan is a bad trade, and only the tiny ranked-key frame (always
-    persisted) must be stable for correctness.
-
-    Long-lived sessions: ``df`` under ``persist_input`` is appended to
-    ``cache_registry`` when one is passed — after materializing the
-    result, call ``.unpersist()`` on each to release executor memory.
-    (The ranked-key frame itself is a lazy ``localCheckpoint``, whose
-    storage is reclaimed with the RDD, not via unpersist.)"""
-    if persist_input:
-        df = df.persist()
-        if cache_registry is not None:
-            cache_registry.append(df)
-    # Persist the distinct keys: instantiating the range partitioner
-    # below runs an EAGER boundary-sampling pass over them at
-    # plan-build time, and without the cache the first real action
-    # would recompute the whole upstream (often a full table assembly)
-    # a second time just to rank the keys. Keys are the reduced
-    # (order_cols-distinct) frame — MEMORY_AND_DISK at warehouse scale.
-    keys = df.select(*order_cols).distinct().persist()
-    if cache_registry is not None:
-        cache_registry.append(keys)
-    if num_partitions:
-        keys = keys.repartitionByRange(num_partitions, *order_cols)
-    else:
-        keys = keys.repartitionByRange(*order_cols)
-
-    with_pid = keys.withColumn("_pid", F.spark_partition_id())
-    w_in = Window.partitionBy("_pid").orderBy(*order_cols)
-    # Lazy localCheckpoint, not persist: the ranked keys feed BOTH the
-    # offsets subplan and the final join, and under the all-lazy design
-    # each broadcast subtree would otherwise re-embed the entire
-    # upstream lineage — chained builders (header -> combined layer,
-    # each minting several id families) make the physical plan grow
-    # multiplicatively until planning itself OOMs. Checkpointing the
-    # (small) ranked-key frame truncates lineage at a stable point;
-    # losing an executor costs a job retry, which is the right trade
-    # for a keys-sized frame.
-    ranked = _stable_ranked(
-        with_pid.withColumn("_rn", F.row_number().over(w_in)),
-        truncate_lineage, cache_registry,
-    )
-
-    # Offsets: prefix-sum of per-partition counts. The counts frame has
-    # ONE row per shuffle partition, so the un-partitioned running-sum
-    # window is a bounded single task — and keeping it as a lazy plan
-    # (rather than a driver collect) means a builder that mints several
-    # independent id families (the APCD header mints four) stays ONE
-    # action instead of a serial chain of blocking collect jobs.
-    counts = ranked.groupBy("_pid").agg(F.max("_rn").alias("_cnt"))
-    w_off = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offset_df = counts.select(
-        "_pid",
-        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"),
-    )
-    key_ids = (
-        ranked.join(F.broadcast(offset_df), "_pid")
-        .withColumn(out_col, (F.col("_rn") + F.col("_off")).cast("long"))
-        .select(*order_cols, out_col)
-    )
-    # plain shuffle join back to the rows: AQE converts it to broadcast
-    # at runtime whenever the key->id map is under the threshold, so a
-    # driver-side size heuristic here would be redundant. Null-safe
-    # equality: order_cols may legitimately contain nulls (e.g. the
-    # xwalk's optional match columns) and a null-unsafe equi-join would
-    # silently drop those rows.
-    aliased = key_ids.select(
-        *[F.col(c).alias(f"_key_{c}") for c in order_cols], out_col
-    )
-    cond = None
-    for c in order_cols:
-        clause = df[c].eqNullSafe(aliased[f"_key_{c}"])
-        cond = clause if cond is None else (cond & clause)
-    return df.join(aliased, cond).drop(*[f"_key_{c}" for c in order_cols])
-
-
-def dense_rank_inline(
     df: DataFrame,
     order_cols: list[str],
     out_col: str = "global_id",
@@ -196,21 +68,12 @@ def dense_rank_inline(
     """Attach a globally dense 1-based id ordered by ``order_cols``
     directly on the rows: ONE range exchange + ONE Arrow pass.
 
-    Same semantics as ``dense_global_id`` (the reference's
-    un-partitioned ``DENSE_RANK() OVER (ORDER BY ...)``,
-    ``load_stage.mcaid_claim_header.R:865-967``) with the plan shape
-    proven by ``dense_event_ids_inline``: range-partition the rows by
-    the key order, sort within partitions, count key CHANGES in a
-    vectorized pass (running count of distinct keys == dense rank),
-    then lift per-partition counts into prefix-sum offsets (#partitions
-    rows broadcast back on ``_pid``).
-
-    vs the keys-map form: no distinct shuffle, no key->id join-back at
-    fact grain — right when the key grain is within a small factor of
-    the row count (claim events, standalone rankings). Keep
-    ``dense_global_id`` when keys << rows (ranking a reduced dimension
-    against a 100 TB fact table: exchanging the facts by range costs
-    more than the distinct + broadcast join-back).
+    The reference's un-partitioned ``DENSE_RANK() OVER (ORDER BY ...)``
+    (``load_stage.mcaid_claim_header.R:865-967``): range-partition the
+    rows by the key order, sort within partitions, count key CHANGES in
+    a vectorized pass (running count of distinct keys == dense rank),
+    then lift per-partition counts into prefix-sum offsets. Rows that
+    share a key share its id.
 
     Null handling is eqNullSafe-style: a NULL key value equals itself
     and keys containing NULLs get ids in Spark's null-first range
@@ -308,33 +171,14 @@ def dense_rank_inline(
                 arrays, names=names + ["_pid", "_loc"]
             )
 
-    ranked = _eager_checkpoint(ranged.mapInArrow(_running, out_schema))
-    # offsets: prefix-sum of per-partition totals. The totals frame is
-    # ONE long per physical partition (bounded metadata, same contract
-    # as the keys-map form's prefix sum), so collecting it and folding
-    # the offsets back as a literal array lookup keeps the final pass
-    # map-only over the checkpointed blocks — no offsets shuffle, no
-    # broadcast-join stage. The totals agg stays JVM-side (map-side
-    # partial max over the cached blocks; the exchange carries one row
-    # per partition).
-    totals = {
-        r["_pid"]: r["_tot"]
-        for r in ranked.groupBy("_pid")
-        .agg(F.max("_loc").alias("_tot"))
-        .collect()
-    }
-    n_parts = (max(totals) + 1) if totals else 0
-    offs, acc = [], 0
-    for p in range(n_parts):
-        offs.append(acc)
-        acc += totals.get(p, 0)
-    off_arr = F.array(*[F.lit(v).cast("long") for v in offs])
-    return ranked.select(
-        *df.columns,
-        (
-            F.col("_loc") + F.element_at(off_arr, F.col("_pid") + 1)
-        ).cast("long").alias(out_col),
+    # eager checkpoint: the totals collect and the id attachment both
+    # read the materialized blocks, so the Arrow pass runs once, and
+    # lineage truncates for chained builders
+    ranked = ranged.mapInArrow(_running, out_schema).localCheckpoint(
+        eager=True
     )
+    (gid,) = _offset_ids(ranked, ["_loc"])
+    return ranked.select(*df.columns, gid.alias(out_col))
 
 
 def dense_event_ids_inline(
@@ -352,10 +196,8 @@ def dense_event_ids_inline(
     ``DENSE_RANK() OVER (ORDER BY person, service_date)`` per family
     plus a separate episode ranking
     (``load_stage.apcd_claim_header.R:905-1018``) — a single-task
-    funnel on Spark. The round-3 form here (tagged explode + range
-    sort + per-claim fold-back) and the keys-map form both pay several
-    fact- or keys-grain shuffles and materializations. This form pays
-    exactly one:
+    funnel on Spark. This form pays exactly one fact-grain shuffle for
+    all families together:
 
       1. one range exchange of ``facts`` by PERSON (equal persons
          never straddle partitions), sorted (person, date) in place;
@@ -364,10 +206,10 @@ def dense_event_ids_inline(
          dense_rank == count of participating keys at-or-before — and
          per episode family the Yale gap-chain start events, all as
          numpy cumsums with O(1) carried state between record batches;
-      3. per-partition totals -> prefix-sum offsets (#partitions
-         rows), broadcast back; id = local + offset, masked by the
-         ROW's own flag so a non-participating claim on a shared
-         service date stays NULL.
+      3. per-partition totals -> prefix-sum offsets (one integer
+         per partition and family), folded back as literal lookups;
+         id = local + offset, masked by the ROW's own flag so a
+         non-participating claim on a shared service date stays NULL.
 
     Justification for the Python crossing: Spark SQL cannot express a
     per-physical-partition running aggregate — Window.partitionBy(
@@ -394,8 +236,8 @@ def dense_event_ids_inline(
     rows may arrive in any order within the key — ids are key-level so
     the tiebreak cannot matter.
 
-    Returns ``facts`` (same rows, eagerly checkpointed — see
-    ``_eager_checkpoint``) plus one nullable long column per family.
+    Returns ``facts`` (same rows, eagerly checkpointed as in
+    ``dense_global_id``) plus one nullable long column per family.
     """
     episode_families = episode_families or []
     flag_names = [flag for flag, _ in families]
@@ -548,49 +390,17 @@ def dense_event_ids_inline(
                 arrays, names=names + ["_pid"] + loc_names
             )
 
-    ranked = _eager_checkpoint(ranged.mapInArrow(_running, out_schema))
-
-    # per-partition totals: the running count's last value (monotone,
-    # so max == total) -> prefix-sum offsets. One row per physical
-    # partition — bounded metadata, so collect it (reading the
-    # just-materialized checkpoint blocks, JVM-side partial max) and
-    # fold the offsets back as literal array lookups on _pid: the id
-    # attachment stays MAP-ONLY over the checkpoint, with no offsets
-    # shuffle and no broadcast-join stage (same fold as
-    # ``dense_rank_inline``).
-    totals = {
-        r["_pid"]: [r[f"_tot{c}"] for c in loc_names]
-        for r in ranked.groupBy("_pid").agg(*[
-            F.max(F.col(c)).alias(f"_tot{c}") for c in loc_names
-        ]).collect()
-    }
-    n_parts = (max(totals) + 1) if totals else 0
-    off_arrays = []
-    for j in range(n_tot):
-        offs, acc = [], 0
-        for p in range(n_parts):
-            offs.append(acc)
-            acc += totals[p][j] if p in totals else 0
-        off_arrays.append(
-            F.array(*[F.lit(v).cast("long") for v in offs])
-        )
-    def _off(j):
-        return F.element_at(off_arrays[j], F.col("_pid") + 1)
-    id_cols = []
-    for i, (flag, out) in enumerate(families):
-        c = loc_names[i]
-        id_cols.append(
-            F.when(
-                F.col(flag) == 1,
-                (F.col(c) + _off(i)).cast("long"),
-            ).alias(out)
-        )
-    for i, (_, out, _) in enumerate(ep_specs):
-        c = loc_names[n_fam + i]
-        id_cols.append(
-            F.when(
-                F.col(ep_mem_names[i]) == 1,
-                (F.col(c) + _off(n_fam + i)).cast("long"),
-            ).alias(out)
-        )
-    return ranked.select(*facts.columns, *id_cols)
+    ranked = ranged.mapInArrow(_running, out_schema).localCheckpoint(
+        eager=True
+    )
+    ids = _offset_ids(ranked, loc_names)
+    # mask each id by the ROW's own participation flag
+    masks = flag_names + ep_mem_names
+    outs = [out for _, out in families] + [out for _, out, _ in ep_specs]
+    return ranked.select(
+        *facts.columns,
+        *[
+            F.when(F.col(m) == 1, i).alias(out)
+            for m, i, out in zip(masks, ids, outs)
+        ],
+    )

@@ -6,8 +6,8 @@ Visits ≤ ``merge_gap_days`` apart merge into one episode per person
 (increment-flag running sum, idiom W4); episodes then get a globally
 dense id (the reference's single-partition ``DENSE_RANK() OVER (ORDER
 BY id, within_person_stay_id)``, idiom W5). The global id uses the
-scalable two-phase ranking in ``dense_id.py`` — never a one-partition
-window over the fact table.
+one-pass range-partitioned ranking in ``dense_id.py`` — never a
+one-partition window over the fact table.
 """
 
 from __future__ import annotations
@@ -57,12 +57,8 @@ def episode_table(
         F.max(date_col).alias("episode_end"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    # collapsed is one row per episode — orders of magnitude smaller
-    # than the event table — so caching it across the ranking's two
-    # jobs is cheap and saves recomputing the window pipeline
     return dense_global_id(
         collapsed,
         order_cols=id_cols + ["within_person_episode_id"],
         out_col=global_id_col,
-        persist_input=True,
     )

@@ -386,20 +386,38 @@ def _rank_cids_arrow(cents: list[tuple[int, list[float]]]):
     rounded in both runtimes. Ranking ties resolve to the lower
     centroid id via a stable argsort over cid-ascending columns
     (``_collect_fixed_centroids`` returns them sorted), matching
-    sort_array over (nc, cid) structs. Zero-norm vectors take cosine
-    −1.0 for every centroid, same as the CASE guard."""
+    sort_array over (nc, cid) structs, which compares -0.0 equal to
+    0.0 — so negative zeros are normalised to +0.0 before the sort.
+    Zero-norm vectors take cosine −1.0 for every centroid, same as the
+    CASE guard.
+
+    Raises ``ValueError`` on a zero-norm centroid (as
+    ``_attach_centroid_rank`` does) and, inside the task, on a NULL or
+    wrong-dimension vector row."""
     import pandas as pd
 
     cids = np.asarray([c for c, _ in cents], dtype=np.int64)
     cvecs = [[float(x) for x in v] for _, v in cents]
     ncs = [_seq_norm(v) for _, v in cents]
+    for cid, nc in zip(cids, ncs):
+        if nc == 0.0:
+            raise ValueError(f"zero-norm centroid vector (id {cid})")
+    dim = len(cvecs[0])
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def rank(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
+        bad = [
+            "NULL" if v is None else f"{len(v)}-dim"
+            for v in vecs if v is None or len(v) != dim
+        ]
+        if bad:
+            raise ValueError(
+                f"centroid ranking needs non-NULL {dim}-dim vectors; "
+                f"got {len(bad)} bad rows, e.g. {bad[0]}"
+            )
         V = np.array(vecs.tolist(), dtype=np.float64)
-        dim = V.shape[1]
         acc = V[:, 0] * V[:, 0]
         for d in range(1, dim):
             acc += V[:, d] * V[:, d]
@@ -413,7 +431,7 @@ def _rank_cids_arrow(cents: list[tuple[int, list[float]]]):
                     dot_acc += V[:, d] * cv[d]
                 cos = dot_acc / (nv * nc)
                 cos[zero] = -1.0
-                NC[:, j] = -cos
+                NC[:, j] = -cos + 0.0  # -0.0 -> +0.0
         order = np.argsort(NC, axis=1, kind="stable")
         ranked = cids[order]
         return pd.Series(list(ranked))
@@ -721,29 +739,6 @@ def rh_planes(num_planes: int, dim: int, seed: str = "rhlsh",
         ]
         for b in range(num_planes)
     ]
-
-
-def _int_dot(vec: Column, plane: list) -> Column:
-    return F.aggregate(
-        F.zip_with(vec, F.lit(plane), lambda x, y: (x * y).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _band_keys(qvec: Column, planes: list, band_size: int) -> Column:
-    """array<struct<band:int, key:long>> — the LSH bucket coordinates
-    of one signature, band bits packed into an integer key."""
-    bits = [(_int_dot(qvec, p) >= 0).cast("long") for p in planes]
-    bands = []
-    for bi in range(len(planes) // band_size):
-        key = F.lit(0).cast("long")
-        for j in range(band_size):
-            key = key + bits[bi * band_size + j] * F.lit(1 << j)
-        bands.append(
-            F.struct(F.lit(bi).alias("band"), key.alias("key"))
-        )
-    return F.array(*bands)
 
 
 def _band_keys_sql(qcol: str, planes: list, band_size: int) -> str:

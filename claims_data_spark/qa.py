@@ -94,15 +94,6 @@ def check_no_overlap_within_person(
     return (name or "no-overlap", bad == 0, f"violations={bad}")
 
 
-def check_rowcount_growth(
-    current: int, previous: int | None, name: str = "rowcount-growth"
-) -> QaResult:
-    """Row count vs previous run, monotonic growth expected
-    (``qa_stage.mcaid_elig_timevar.R:48-103``)."""
-    ok = previous is None or current >= previous
-    return (name, ok, f"current={current} previous={previous}")
-
-
 def check_member_count_match(
     built: DataFrame,
     raw: DataFrame,

@@ -121,25 +121,3 @@ def spread(df, min_partitions: int | None = None):
         except Exception:
             pass
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Register the driver's parquet tables as temp views; return dict of DataFrames.
-
-    Mirrors the reference's ``schema.table`` catalog reads
-    (``R/claims_elig.R:1405``): every query starts from named tables,
-    never inlined file paths, so Catalyst sees one consistent relation
-    per table (scan reuse, pushdown).
-    """
-    all_names = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    out = {}
-    for name in names or all_names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

@@ -138,7 +138,6 @@ def build_apcd_claim_header(
     provider: DataFrame | None = None,
     ref_provider_npi: DataFrame | None = None,
     ref_provider_master: DataFrame | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """APCD claim_header analytic table
     (``load_stage.apcd_claim_header.R:74-1105``).
@@ -149,7 +148,8 @@ def build_apcd_claim_header(
     key and the final assembly is a chain of co-partitioned left
     joins; reference tables broadcast. Utilization event ids
     (pc_visit_id / inpatient_id / ed_perform_id / ed_pophealth_id)
-    use the two-phase global dense ranking, not the reference's
+    mint together in one range-partitioned pass over the claim rows
+    (``dense_id.dense_event_ids_inline``), not the reference's
     single-partition DENSE_RANK (``:536-560,1012-1018``).
     """
     # STEP 1: header projection; drop denied/orphaned claims (``:148``)
@@ -441,16 +441,13 @@ def build_apcd_claim_header(
     # per build — see SCALE.md round-5 notes). The projection's pruned
     # plan skips the primary-dx aggregate entirely (left-join
     # elimination against the icd1 rollup).
-    from claims_data_spark.operators.dense_id import (
-        _eager_checkpoint,
-        dense_event_ids_inline,
-    )
+    from claims_data_spark.operators.dense_id import dense_event_ids_inline
 
-    narrow = _eager_checkpoint(out.select(
+    narrow = out.select(
         "claim_header_id", "id_apcd", "first_service_date",
         "ed_yale_carrier", "ed_yale_opt", "ed_yale_ipt",
         "pc_visit", "inpatient", "ed_perform",
-    ))
+    ).localCheckpoint(eager=True)
 
     # All four id families — pc_visit / inpatient / ed_perform ranked
     # by (person, service_date), plus the Yale 1-day ED episode id

@@ -5,8 +5,9 @@ Shape: project raw lines to header grain, pre-aggregate one flag table
 per concept at the claim grain (the reference's staged temp tables,
 kept deliberately: each flag is a partial aggregate that map-side
 combines), then one multi-way left join on ``claim_header_id``
-(``:1020-1038``). ED episodes get globally dense ids via the two-phase
-ranking — not the reference's single-partition DENSE_RANK.
+(``:1020-1038``). ED episodes get globally dense ids via the one-pass
+range-partitioned ranking — not the reference's single-partition
+DENSE_RANK.
 """
 
 from __future__ import annotations

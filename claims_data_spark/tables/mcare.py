@@ -5,14 +5,14 @@
 ``build_mcare_claim_header`` mirrors the APCD/mcaid shape: one
 groupBy per per-claim concept so every intermediate shares the
 claim_header_id shuffle key, reference tables broadcast, and event
-ids minted with the two-phase global dense ranking.
+ids minted in one range-partitioned pass (``dense_event_ids_inline``).
 
 ``build_mcaid_mcare_claim_header`` is the cross-source union: each
 side routes through the person crosswalk to ``id_apde``, source
 -specific columns null-fill, and the utilization event ids are
 RE-MINTED over the combined person space — the reference's
 dense_rank-with-sort-to-bottom idiom (``mcaid_mcare_claim_header.R:
-150-175``) becomes a filtered two-phase ranking, and the Yale ED
+150-175``) becomes a filtered range-partitioned ranking, and the Yale ED
 1-day episode clustering re-runs across sources so a Medicaid visit
 and a Medicare visit one day apart merge into one episode.
 """
@@ -22,10 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from claims_data_spark.operators.dense_id import (
-    _eager_checkpoint,
-    dense_event_ids_inline,
-)
+from claims_data_spark.operators.dense_id import dense_event_ids_inline
 
 # ED definitions (load_stage.mcare_claim_header.R:379-399): the RDA
 # 'perform' sets are narrower than the Yale 'pophealth' sets
@@ -242,11 +239,11 @@ def build_mcare_claim_header(
     # The narrow minting projection is eagerly checkpointed (same
     # rationale as the APCD builder: no concurrent-leaf cache races,
     # bounded lineage, primary-dx aggregate pruned out of its plan).
-    narrow = _eager_checkpoint(out.select(
+    narrow = out.select(
         "claim_header_id", "id_mcare", "first_service_date",
         "discharge_date", "ed_yale_carrier", "ed_yale_opt", "ed_yale_ipt",
         "pc_visit", "inpatient", "ed_perform",
-    ))
+    ).localCheckpoint(eager=True)
     svc_ids = dense_event_ids_inline(
         narrow, "id_mcare", "first_service_date",
         families=[

@@ -203,7 +203,7 @@ def build_mcare_base_claims(
 # ---------------------------------------------------------------------------
 # carrier (bcarrier) + DME claims — the non-facility stage unions
 # (load_stage.mcare_bcarrier_claims.R:10-196, mcare_bcarrier_line.R,
-# mcare_dme_claims.R, mcare_dme_line.R). Same three-vintage rename
+# mcare_dme_line.R). Same three-vintage rename
 # pattern as the facility files, but with the carrier dx surface
 # (13 dx slots each paired with a version column) and per-line
 # rendering-provider vocabulary.
@@ -342,26 +342,8 @@ def bcarrier_line_vintage_map(vintage: str) -> dict[str, str | None]:
     }
 
 
-# DME extracts exist only in the 'k' vocabulary (dme_claims.R /
-# dme_line.R: every year block is identical renames) — the claims map
-# is the carrier 'k' map minus the billing/CPO/SOS NPIs.
-DME_CLAIMS_TARGETS = [
-    "id_mcare", "claim_header_id", "first_service_date",
-    "last_service_date", "claim_type", "denial_code",
-    "provider_referring_npi", *_CARRIER_DX_FAN,
-]
-
-DME_CLAIMS_MAP: dict[str, str | None] = {
-    "id_mcare": "bene_id",
-    "claim_header_id": "clm_id",
-    "first_service_date": "clm_from_dt",
-    "last_service_date": "clm_thru_dt",
-    "claim_type": "nch_clm_type_cd",
-    "denial_code": "carr_clm_pmt_dnl_cd",
-    "provider_referring_npi": "rfr_physn_npi",
-    **_CARRIER_DX_FAN,
-}
-
+# DME extracts exist only in the 'k' vocabulary (dme_line.R: every
+# year block is identical renames).
 DME_LINE_TARGETS = [
     "id_mcare", "claim_header_id", "claim_line_id", "type_of_service",
     "place_of_service_code", "procedure_code_hcpcs",
@@ -402,12 +384,6 @@ def build_mcare_bcarrier_line(
     return harmonized_stage_union(
         [(df, bcarrier_line_vintage_map(v)) for df, v in raws],
         BCARRIER_LINE_TARGETS,
-    )
-
-
-def build_mcare_dme_claims(raws: list[DataFrame]) -> DataFrame:
-    return harmonized_stage_union(
-        [(df, DME_CLAIMS_MAP) for df in raws], DME_CLAIMS_TARGETS
     )
 
 

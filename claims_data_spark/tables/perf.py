@@ -230,9 +230,14 @@ def _flags_within_multi(
     """Fused forward as-of over several event streams: ONE union +
     ONE id-partitioned window computes every (stream, horizon) flag.
 
-    Each stream carries ``[id_col, "_ts", payload date column(s)]``
-    (a payload column may be conditionally NULL to encode a stream
-    subset, e.g. FUH's only_30_day_fu='N' 7-day channel);
+    Each stream carries ``[id_col, "_ts", payload date column(s)]``.
+    Every payload must be a copy of its stream's ``_ts``, possibly
+    NULL-masked to encode a stream subset (e.g. FUH's
+    only_30_day_fu='N' 7-day channel): payloads are carried
+    independently, so a payload that differed from ``_ts`` could come
+    from a row other than the as-of match. Payload names must be
+    unique across streams (a collision raises ``ValueError``: the
+    union would merge two streams into one carry);
     ``flag_specs`` = (payload_col, max_days, flag_col) and appends
     the flags in order. Per-flag semantics are exactly
     ``_flag_within``'s — earliest event with date >= the row's probe,
@@ -243,6 +248,9 @@ def _flags_within_multi(
     payload_cols: list[str] = []
     for s in event_streams:
         payload_cols += [c for c in s.columns if c not in (id_col, "_ts")]
+    dupes = sorted({c for c in payload_cols if payload_cols.count(c) > 1})
+    if dupes:
+        raise ValueError(f"payload columns repeated across streams: {dupes}")
     l_tag = index_df.select(
         F.col(id_col),
         F.col(probe_col).alias("_ts"),

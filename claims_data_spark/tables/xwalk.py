@@ -38,11 +38,11 @@ def build_xwalk(
     joined = mcaid_persons.join(mcare_persons, list(match_cols), "full")
     if pha_persons is not None:
         joined = joined.join(pha_persons, list(match_cols), "full")
-    # two-phase global dense ranking: an un-partitioned dense_rank
-    # funnels the whole person dimension through one task, which at an
-    # all-payer 100x person count is the single-task trap SCALE.md
-    # documents — dense_global_id ships only per-partition counts to
-    # the driver
+    # range-partitioned global dense ranking: an un-partitioned
+    # dense_rank funnels the whole person dimension through one task,
+    # which at an all-payer 100x person count is the single-task trap
+    # SCALE.md documents — dense_global_id ships only per-partition
+    # counts to the driver
     id_cols = ["id_mcaid", "id_mcare"] + (
         ["id_pha"] if pha_persons is not None else []
     )

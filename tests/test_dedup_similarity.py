@@ -3,6 +3,7 @@ jaccard), similarity search (brute-force + IVF recall), multimodal
 plumbing, streaming batch-equivalence, incremental merge."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from claims_data_spark.operators.dedup import (
@@ -165,6 +166,52 @@ def test_ivf_fixed_centroids_arrow_rank(spark):
     assert [r["vec_id"] for r in out] == expected
     assert [r["rank"] for r in out] == [1, 2, 3]
 
+
+
+def test_rank_cids_arrow_zero_norm_centroid_raises():
+    """A zero-norm centroid fails loudly, as in _attach_centroid_rank,
+    instead of ranking NaN cosines last."""
+    from claims_data_spark.operators.similarity import _rank_cids_arrow
+
+    with pytest.raises(ValueError, match="zero-norm centroid vector"):
+        _rank_cids_arrow([(1, [1.0, 0.0]), (2, [0.0, 0.0])])
+
+
+@pytest.mark.parametrize(
+    "vec", [None, [1.0, 0.0, 0.0]], ids=["null_row", "wrong_dim_row"]
+)
+def test_rank_cids_arrow_rejects_bad_vector_rows(spark, vec):
+    """A NULL or wrong-dimension vector row raises a ValueError naming
+    the problem, not an opaque numpy error from inside the worker."""
+    from claims_data_spark.operators.similarity import _rank_cids_arrow
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, vec)], "vec_id long, embedding array<double>"
+    )
+    ranker = _rank_cids_arrow([(1, [1.0, 0.0]), (2, [0.0, 1.0])])
+    with pytest.raises(Exception, match="non-NULL 2-dim vectors"):
+        df.select(ranker(F.col("embedding"))).collect()
+
+
+def test_rank_cids_arrow_negative_zero_ties_to_lower_cid(spark):
+    """Cosines of -0.0 and +0.0 tie (Spark compares them equal), so the
+    lower centroid id ranks first, as in _attach_centroid_rank."""
+    from claims_data_spark.operators.similarity import (
+        _attach_centroid_rank,
+        _rank_cids_arrow,
+    )
+
+    # against [1, 0]: cid 1 gives cos -0.0 (rank key +0.0), cid 2 gives
+    # cos +0.0 (rank key -0.0) — IEEE total order would put cid 2 first
+    cents = [(1, [-0.0, -1.0]), (2, [0.0, 1.0])]
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    arrow = df.select(_rank_cids_arrow(cents)(F.col("embedding"))).first()[0]
+    sql = _attach_centroid_rank(df, cents, "embedding", "_cr").select(
+        F.transform("_cr", lambda s: s["cid"])
+    ).first()[0]
+    assert list(arrow) == list(sql) == [1, 2]
 
 def test_multimodal_feature_plumbing(spark):
     media = spark.createDataFrame(

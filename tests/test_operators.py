@@ -90,16 +90,14 @@ def test_dense_global_id_matches_dense_rank(spark):
     assert ids == list(range(1, len(ids) + 1))
 
 
-def test_dense_rank_inline_matches_dense_rank(spark):
-    """The one-pass inline form must agree with the un-partitioned
+def test_dense_global_id_nulls_strings_batches(spark):
+    """The one-pass mint must agree with the un-partitioned
     DENSE_RANK oracle on a key mix with NULLs in both key columns and
     string keys, across tiny Arrow batches (carried key state) and
     multiple range partitions."""
     import random
 
     from pyspark.sql import Window
-
-    from claims_data_spark.operators.dense_id import dense_rank_inline
 
     rng = random.Random(11)
     rows = []
@@ -111,7 +109,7 @@ def test_dense_rank_inline_matches_dense_rank(spark):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "13")
     try:
         df = spark.createDataFrame(rows, "rid long, a string, b int")
-        out = dense_rank_inline(
+        out = dense_global_id(
             df, ["a", "b"], out_col="gid", num_partitions=5
         )
         got = {r["rid"]: r["gid"] for r in out.collect()}
@@ -126,18 +124,16 @@ def test_dense_rank_inline_matches_dense_rank(spark):
     assert ids == list(range(1, len(ids) + 1))
 
 
-def test_dense_rank_inline_dates(spark):
+def test_dense_global_id_dates(spark):
     """date32 keys go through the epoch-day cast path."""
     from pyspark.sql import Window
-
-    from claims_data_spark.operators.dense_id import dense_rank_inline
 
     rows = [
         (i, i % 9, d("2020-01-01") + dt.timedelta(days=i % 11))
         for i in range(150)
     ]
     df = spark.createDataFrame(rows, "rid long, k int, dte date")
-    out = dense_rank_inline(df, ["k", "dte"], out_col="gid", num_partitions=3)
+    out = dense_global_id(df, ["k", "dte"], out_col="gid", num_partitions=3)
     expected = df.withColumn(
         "gid_exp", F.dense_rank().over(Window.orderBy("k", "dte"))
     )
@@ -146,13 +142,11 @@ def test_dense_rank_inline_dates(spark):
     assert got == want
 
 
-def test_dense_rank_inline_float_nan(spark):
+def test_dense_global_id_float_nan(spark):
     """Float keys with NaN: DENSE_RANK treats NaN as equal to itself
     (one rank group, ordered above every number in Spark), and NULL,
     NaN and 0.0 are three distinct rank groups."""
     from pyspark.sql import Window
-
-    from claims_data_spark.operators.dense_id import dense_rank_inline
 
     nan = float("nan")
     rows = [
@@ -163,7 +157,7 @@ def test_dense_rank_inline_float_nan(spark):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
     try:
         df = spark.createDataFrame(rows, "rid long, v double")
-        out = dense_rank_inline(df, ["v"], out_col="gid", num_partitions=2)
+        out = dense_global_id(df, ["v"], out_col="gid", num_partitions=2)
         got = {r["rid"]: r["gid"] for r in out.collect()}
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)

@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from claims_data_spark.tables.perf import (
+    _flags_within_multi,
     ed_followup_measure,
     fuh_measure,
     thin_events_greedy,
@@ -71,6 +73,22 @@ def test_fua_same_day_follow_up_counts(spark):
     assert out[2]["follow_up_7_day"] == 0 and out[2]["follow_up_30_day"] == 1
     assert out[4]["follow_up_7_day"] == 0 and out[4]["follow_up_30_day"] == 0
 
+
+
+def test_flags_within_multi_rejects_colliding_payload(spark):
+    """Two streams carrying the same payload name would merge into one
+    carried column: the fused as-of refuses them."""
+    index = spark.createDataFrame(
+        [("p", d("2019-01-01"))], "id string, probe date"
+    )
+    stream = spark.createDataFrame(
+        [("p", d("2019-01-03"))], "id string, _ts date"
+    ).withColumn("_evt", F.col("_ts"))
+    with pytest.raises(ValueError, match="_evt"):
+        _flags_within_multi(
+            index, "id", "probe", [stream, stream],
+            [("_evt", 7, "flag_a"), ("_evt", 30, "flag_b")],
+        )
 
 def test_fuh_roll_forward_and_day_after_windows(spark):
     idx = spark.createDataFrame(

@@ -4,10 +4,12 @@ Usage: python tools/time_subset.py <sf_dir> <query> [<query> ...]
 Each query runs 3x (construction + noop write timed together, guide
 SS1.4); prints per-query min and all walls. No caching across runs.
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# import the engine from the checkout this script lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 from claims_data_spark.session import get_spark  # noqa: E402
 
