@@ -6691,11 +6691,11 @@ FROM assigned a LEFT JOIN dups d USING (vec_id)
 def q_diversity_sample(spark, sf_dir):
     """Cluster-balanced diversity sampling (operators/similarity.
     diversity_sample): nearest-centroid assignment over a fixed
-    8-vector codebook (the knn_ivf coarse-quantizer discipline —
-    unrolled-codegen cosine, centroids as exact double literals), then
-    at most 40 survivors per cluster by the md5-pinned draw. Equal
-    quotas flatten the embedding-space density — the coreset-selection
-    step of data-pruning pipelines. Fully value-checked: assignment,
+    8-vector codebook (the knn_ivf coarse-quantizer discipline and its
+    Arrow centroid ranker), then at most 40 survivors per cluster by
+    the md5-pinned draw. Equal quotas flatten the embedding-space
+    density — the coreset-selection step of data-pruning pipelines.
+    Fully value-checked: assignment,
     draw ordering, and ranks are all engine-portable."""
     from claims_data_spark.operators.similarity import (
         _collect_fixed_centroids,

@@ -261,33 +261,10 @@ def _collect_fixed_centroids(
     return sorted((int(r[0]), [float(x) for x in r[1]]) for r in cent_rows)
 
 
-def _dlit(x: float) -> str:
-    """Exact double literal: repr() round-trips IEEE doubles and the
-    ``D`` suffix types it DOUBLE (bare decimals would be DECIMAL under
-    ANSI) — verified bit-exact against the CAST('…' AS DOUBLE) form
-    this replaces, at ONE tree node per literal instead of three: the
-    fixed-quantizer assignment embeds 8x64 of these, and the planning
-    floor walks every node on every optimizer pass."""
-    if x != x or x in (float("inf"), float("-inf")):
-        raise ValueError(f"non-finite literal {x!r}")
-    return f"{x!r}D"
-
-
-def _sql_dot_lit_unrolled(col: str, coeffs: list[float]) -> str:
-    """Dot product against a LITERAL vector, unrolled to a left-nested
-    sum — the association order of a sequential fold, so values are
-    bit-identical to ``aggregate(zip_with(...))`` and to the oracle's
-    ``list_aggregate(..., 'sum')``, but the expression is plain
-    arithmetic whole-stage codegen fuses (the lambda form is
-    interpreted per element: ~40x slower, measured at sf10)."""
-    return " + ".join(
-        f"element_at({col}, {i + 1}) * {_dlit(c)}"
-        for i, c in enumerate(coeffs)
-    )
-
-
 def _sql_norm_unrolled(col: str, dim: int) -> str:
-    """L2 norm unrolled the same way (sequential-fold order)."""
+    """L2 norm unrolled to a left-nested sum: the association order of
+    a sequential fold, so values are bit-identical to the oracle's
+    ``list_aggregate(..., 'sum')``."""
     sq = " + ".join(
         f"element_at({col}, {i}) * element_at({col}, {i})"
         for i in range(1, dim + 1)
@@ -307,102 +284,43 @@ def _seq_norm(vals: list[float]) -> float:
     return math.sqrt(s)
 
 
-def _attach_centroid_rank(
-    df: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    vec_name: str,
-    out: str,
-) -> DataFrame:
-    """Attach ``out`` = row-local centroid ranking by cosine (first =
-    nearest, ties to the lower centroid id) as a sorted array of
-    (-cos, cid) structs — compiled to unrolled-arithmetic SQL
-    (codegen, no per-element lambdas: the lambda form is interpreted
-    per element, ~6x slower end-to-end at sf10, measured), so an ANSI
-    oracle reproduces the assignment bit-for-bit: centroid
-    coefficients and norms embed as exact double literals (repr
-    round-trip of the same parquet doubles the oracle reads), and
-    every fold keeps the sequential association order.
-
-    The norm and each centroid dot are SEPARATE projection columns,
-    not one expression tree: whole-stage codegen splits methods
-    per-expression, and one fused 8x64-term tree overflows the JVM's
-    64 KB method limit, silently falling back to interpreted mode
-    (measured: the fallback plus failed Janino compile cost more than
-    the lambdas it replaced). For very high-dimensional embeddings
-    (>~1k dims) even one dot outgrows a method — that regime belongs
-    to the Arrow/BLAS path (:func:`ivf_build`), not this oracle-exact
-    one.
-
-    Zero-norm row vectors take cosine -1.0 (worst similarity, assigns
-    to the lowest centroid id) instead of raising DIVIDE_BY_ZERO under
-    ANSI."""
-    dim = len(cents[0][1])
-    col = f"`{vec_name}`" if not vec_name.startswith("`") else vec_name
-    nv_col = f"_cr_nv_{out}"
-    cols = {nv_col: F.expr(_sql_norm_unrolled(col, dim))}
-    structs = []
-    for cid, cv in cents:
-        nc = _seq_norm(cv)
-        if nc == 0.0:
-            raise ValueError(f"zero-norm centroid vector (id {cid})")
-        dcol = f"_cr_dot_{out}_{cid}"
-        cols[dcol] = F.expr(_sql_dot_lit_unrolled(col, cv))
-        cos = (
-            f"CASE WHEN `{nv_col}` = {_dlit(0.0)} THEN {_dlit(-1.0)} "
-            f"ELSE `{dcol}` / (`{nv_col}` * {_dlit(nc)}) END"
-        )
-        structs.append(
-            f"named_struct('nc', -({cos}), 'cid', CAST({int(cid)} AS BIGINT))"
-        )
-    ranked = F.expr("sort_array(array(" + ", ".join(structs) + "))")
-    return (
-        df.withColumns(cols)
-        .withColumn(out, ranked)
-        .drop(*cols.keys())
-    )
-
-
 def _rank_cids_arrow(cents: list[tuple[int, list[float]]]):
     """Arrow-batched centroid ranking: returns a pandas_udf mapping a
     vector column to the FULL centroid-id list sorted by (−cos, cid)
-    ascending — bit-identical to ``_attach_centroid_rank``'s unrolled
-    literal SQL, at a plan size of ONE node.
-
-    Why this replaces the literal-compiled form for knn_ivf (round-11
-    verdict task 5): the 8×64 exact double literals made the plan tree
-    so large that Catalyst's quadratic ConstraintPropagation cost
-    ~5.6 s of driver time and Janino another ~4 s of codegen per
-    action — a data-independent floor that forced a scoped-conf
-    workaround + eager localCheckpoint. The Arrow form deletes the
-    literal tree, the conf toggle and the checkpoint; the kernel is
-    numpy over float64 batches.
+    ascending (first = nearest, ties to the lower centroid id), at a
+    plan size of ONE node. The only kernel that ranks rows against
+    fixed centroids: ``ivf_topk_fixed_centroids``, ``diversity_sample``
+    and ``semantic_dedup`` all assign with it.
 
     Bit-exactness contract (the oracle reproduces assignments
-    value-for-value): every float op replicates the SQL form's
+    value-for-value): every float op replicates the oracle's
     SEQUENTIAL fold — ``acc = t0; acc += t_d`` left-association for
     dots and squared norms (numpy elementwise mul/add are plain IEEE
     double ops, no FMA fusion across the separate ufunc calls),
     division as dot/(nv*nc) in the same association, sqrt correctly
     rounded in both runtimes. Ranking ties resolve to the lower
     centroid id via a stable argsort over cid-ascending columns
-    (``_collect_fixed_centroids`` returns them sorted), matching
-    sort_array over (nc, cid) structs, which compares -0.0 equal to
-    0.0 — so negative zeros are normalised to +0.0 before the sort.
-    Zero-norm vectors take cosine −1.0 for every centroid, same as the
-    CASE guard.
+    (callers pass centroids sorted by id), and -0.0 ties +0.0 as it
+    does in SQL ordering — so negative zeros are normalised to +0.0
+    before the sort. Zero-norm vectors take cosine −1.0 for every
+    centroid, so they rank by ascending centroid id.
 
-    Raises ``ValueError`` on a zero-norm centroid (as
-    ``_attach_centroid_rank`` does) and, inside the task, on a NULL or
+    Raises ``ValueError`` on a zero-norm centroid or centroids of
+    different lengths and, inside the task, on a NULL or
     wrong-dimension vector row."""
     import pandas as pd
 
     cids = np.asarray([c for c, _ in cents], dtype=np.int64)
     cvecs = [[float(x) for x in v] for _, v in cents]
+    dim = len(cvecs[0])
+    if any(len(v) != dim for v in cvecs):
+        raise ValueError(
+            f"centroid vectors differ in length: {sorted({len(v) for v in cvecs})}"
+        )
     ncs = [_seq_norm(v) for _, v in cents]
     for cid, nc in zip(cids, ncs):
         if nc == 0.0:
             raise ValueError(f"zero-norm centroid vector (id {cid})")
-    dim = len(cvecs[0])
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def rank(vecs: pd.Series) -> pd.Series:
@@ -456,15 +374,14 @@ def ivf_topk_fixed_centroids(
     recall for exact reproducibility), labelled by those ids.
 
     Unlike the k-means path (:func:`ivf_build`/:func:`ivf_topk`),
-    every step here is deterministic JVM expression work — the
-    centroid vectors become array literals, assignment and probe
-    selection are a row-local sort of (−cos, cid) structs (first-max,
-    ties to the lower centroid id), scoring reuses the sequential-fold
-    ``cosine`` — so an ANSI-SQL oracle reproduces assignments, probes
-    and the exact top-k over the probed lists value-for-value. This is
-    the driver-checked variant; the scale story is identical to
-    ``ivf_topk`` (probe table broadcast, corpus joined on
-    ``centroid_id`` → partition pruning).
+    every step here is deterministic — assignment and probe selection
+    rank the centroids by (−cos, cid) with :func:`_rank_cids_arrow`
+    (first-max, ties to the lower centroid id), scoring reuses the
+    sequential-fold ``cosine`` — so an ANSI-SQL oracle reproduces
+    assignments, probes and the exact top-k over the probed lists
+    value-for-value. This is the oracle-checked variant; the scale
+    story is identical to ``ivf_topk`` (probe table broadcast, corpus
+    joined on ``centroid_id`` → partition pruning).
 
     The centroid collect is bounded metadata: ``len(centroid_ids)``
     rows.
@@ -472,12 +389,6 @@ def ivf_topk_fixed_centroids(
     cents = _collect_fixed_centroids(corpus, centroid_ids, corpus_id, corpus_vec)
     dim = len(cents[0][1])
 
-    # Arrow-batched ranking (see _rank_cids_arrow): the assignment is
-    # ONE ArrowEvalPython node instead of an 8×dim literal expression
-    # tree — deletes the quadratic ConstraintPropagation planner floor,
-    # the Janino codegen floor, and the scoped-conf + localCheckpoint
-    # workaround they forced. Values bit-identical to the unrolled SQL
-    # (sequential-fold arithmetic replicated in numpy).
     ranker = _rank_cids_arrow(cents)
     # spread: a small parquet scans as 1-2 tasks, serializing the
     # CPU-heavy assignment + verify stages regardless of cores
@@ -581,7 +492,7 @@ def diversity_sample(
     num_salts: int = 16,
 ) -> DataFrame:
     """Diversity-preserving corpus subsampling: assign each row to its
-    nearest centroid (cosine over PLAN-LITERAL centroids — a k-means
+    nearest centroid (cosine against fixed centroids — a k-means
     codebook from :func:`claims_data_spark.operators.cluster.kmeans_fit`,
     or any fixed anchor set), then keep at most ``n_per_cluster`` rows
     per cluster by the deterministic md5 draw. Equal per-cluster
@@ -591,19 +502,20 @@ def diversity_sample(
     pipelines (SemDeDup-adjacent, but keeping diverse survivors rather
     than dropping near-dups).
 
-    Scale shape: assignment is the same unrolled-codegen projection
-    the IVF oracle path uses (`_attach_centroid_rank` — map-only, no
-    lambdas, 64 KB-method-aware), the draw is the engine-portable
-    md5 uniform, and the quota is ONE rank window partitioned by
-    cluster id. With few clusters over a huge corpus that window is a
-    skew funnel (every row shuffles into k partitions);
+    Scale shape: assignment is the map-only Arrow ranker the IVF
+    oracle path uses (:func:`_rank_cids_arrow`), the draw is the
+    engine-portable md5 uniform, and the quota is ONE rank window
+    partitioned by cluster id. With few clusters over a huge corpus
+    that window is a skew funnel (every row shuffles into k
+    partitions);
     ``two_phase=True`` pre-prunes per (cluster, salt) to
     ``n_per_cluster`` candidates first — the final window then sees at
     most ``num_salts * n_per_cluster`` rows per cluster, the
     ``domain_cap`` salted-top-k pattern. Rows with NULL vectors carry
     no position in the space and are dropped (document them upstream);
     zero-norm vectors assign to the lowest centroid id (cosine -1
-    everywhere, `_attach_centroid_rank`'s documented channel).
+    everywhere). Centroids of different lengths, and vectors whose
+    length differs from the centroids', raise ``ValueError``.
 
     Deterministic and retry-stable: assignment, draw, and tiebreak
     (draw, then id) are all value-derived; no ``rand()``.
@@ -613,9 +525,9 @@ def diversity_sample(
     if n_per_cluster < 1:
         raise ValueError("n_per_cluster must be >= 1")
     cents = [(i, list(map(float, c))) for i, c in enumerate(centroids)]
-    out = _attach_centroid_rank(
-        df.filter(F.col(vec_col).isNotNull()), cents, vec_col, "_dvr"
-    ).withColumn(cluster_col, F.col("_dvr")[0]["cid"]).drop("_dvr")
+    out = df.filter(F.col(vec_col).isNotNull()).withColumn(
+        cluster_col, _rank_cids_arrow(cents)(F.col(vec_col))[0]
+    )
     u = F.conv(
         F.substring(
             F.md5(F.concat(F.col(id_col).cast("string"), F.lit(seed))), 1, 8
@@ -663,26 +575,20 @@ def semantic_dedup(
     buckets — the self-join keys on ``centroid_id``, so pair count is
     sum(|cluster|^2), bounded by the quantizer's granularity (at 100 TB
     you raise C so clusters stay ~1e4-1e5 rows; assignment itself is a
-    map-only pass). No global cartesian ever forms. The codebook here
-    is FIXED seed vectors (same trade as
-    :func:`ivf_topk_fixed_centroids`): every step is deterministic JVM
-    expression work an ANSI oracle reproduces value-for-value.
+    map-only Arrow pass, :func:`_rank_cids_arrow`). No global cartesian
+    ever forms. The codebook here is FIXED seed vectors (same trade as
+    :func:`ivf_topk_fixed_centroids`): every step is deterministic work
+    an ANSI oracle reproduces value-for-value.
 
     Returns one row per corpus vector: id, centroid_id, is_dup (1 when
     a smaller-id neighbor in the same cluster is >= threshold).
     """
     cents = _collect_fixed_centroids(corpus, centroid_ids, id_col, vec_col)
-    # persisted: the assignment (K centroid distances per row, the
-    # expensive unrolled-codegen pass) is consumed THREE times below
-    # (both self-join sides + the final flag join) and Catalyst does
-    # not reuse work across aliased self-join sides (SCALE.md round-9
-    # addendum). Materializing (id, vec, centroid) is also the
-    # standard SemDeDup shape — store assignments once, reuse.
     assigned = spread(
-        _attach_centroid_rank(corpus, cents, vec_col, "_cr")
-        .withColumn("centroid_id", F.col("_cr")[0]["cid"])
-        .drop("_cr")
-    ).persist()
+        corpus.withColumn(
+            "centroid_id", _rank_cids_arrow(cents)(F.col(vec_col))[0]
+        )
+    )
     left = assigned.select(
         F.col("centroid_id"),
         F.col(id_col).alias("_lid"),

@@ -2,6 +2,8 @@
 jaccard), similarity search (brute-force + IVF recall), multimodal
 plumbing, streaming batch-equivalence, incremental merge."""
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -107,22 +109,37 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert recall >= 0.6  # nprobe=3 of 6 lists: expect most of top-5 found
 
 
+def _py_rank_cids(vec, cents):
+    """Python twin of the centroid ranking: sequential-fold dots and
+    norms (``acc = t0; acc += t_d``), cosine dot/(nv*nc), zero-norm
+    vectors at cosine -1.0 everywhere, and a sort on (-cos, cid) in
+    which -0.0 compares equal to 0.0, as in SQL ordering."""
+    def fold(xs, ys):
+        acc = xs[0] * ys[0]
+        for x, y in zip(xs[1:], ys[1:]):
+            acc += x * y
+        return acc
+
+    nv = math.sqrt(fold(vec, vec))
+    keys = []
+    for cid, cv in cents:
+        cos = -1.0 if nv == 0.0 else fold(vec, cv) / (nv * math.sqrt(fold(cv, cv)))
+        keys.append((-cos, cid))
+    return [cid for _, cid in sorted(keys)]
+
+
 def test_ivf_fixed_centroids_arrow_rank(spark):
-    """ivf_topk_fixed_centroids (round 11): the Arrow-batched ranking
-    must (a) rank bit-identically to the unrolled-literal SQL form it
-    replaced (_attach_centroid_rank stays as diversity_sample's
-    engine, so it is the in-repo oracle here — including a zero-norm
-    vector's all-centroids-tie channel), (b) reproduce the exact
-    top-k when every list is probed, and (c) keep the plan free of
-    both the literal expression tree and any checkpoint scan."""
+    """ivf_topk_fixed_centroids: the Arrow-batched ranking must (a)
+    rank bit-identically to the sequential-fold Python twin —
+    including a zero-norm vector's all-centroids-tie channel, (b)
+    reproduce the exact top-k when every list is probed, and (c) keep
+    the plan free of both a literal expression tree and any
+    checkpoint scan."""
     from claims_data_spark.operators.similarity import (
-        _attach_centroid_rank,
         _collect_fixed_centroids,
         _rank_cids_arrow,
         ivf_topk_fixed_centroids,
     )
-    import numpy as np
-    from pyspark.sql import functions as F
 
     corpus, m = _emb(spark, n=60)
     # splice in a zero-norm vector (cosine -1 everywhere -> ranked by
@@ -133,16 +150,13 @@ def test_ivf_fixed_centroids_arrow_rank(spark):
         )
     )
     cents = _collect_fixed_centroids(corpus, [0, 20, 40], "vec_id", "embedding")
-    sql_rank = _attach_centroid_rank(corpus, cents, "embedding", "_cr").select(
-        "vec_id", F.transform("_cr", lambda s: s["cid"]).alias("cids")
-    )
-    arrow_rank = corpus.select(
-        "vec_id", _rank_cids_arrow(cents)(F.col("embedding")).alias("cids")
-    )
-    got_sql = {r["vec_id"]: list(r["cids"]) for r in sql_rank.collect()}
-    got_arrow = {r["vec_id"]: list(r["cids"]) for r in arrow_rank.collect()}
-    assert got_arrow == got_sql
-    assert got_arrow[999] == [0, 20, 40]
+    rows = corpus.select(
+        "vec_id", "embedding",
+        _rank_cids_arrow(cents)(F.col("embedding")).alias("cids"),
+    ).collect()
+    for r in rows:
+        assert list(r["cids"]) == _py_rank_cids(list(r["embedding"]), cents)
+    assert {r["vec_id"]: list(r["cids"]) for r in rows}[999] == [0, 20, 40]
 
     queries = spark.createDataFrame(
         [(0, [float(x) for x in m[7]])],
@@ -168,13 +182,24 @@ def test_ivf_fixed_centroids_arrow_rank(spark):
 
 
 
-def test_rank_cids_arrow_zero_norm_centroid_raises():
-    """A zero-norm centroid fails loudly, as in _attach_centroid_rank,
-    instead of ranking NaN cosines last."""
+@pytest.mark.parametrize(
+    "cents, match",
+    [
+        ([(1, [1.0, 0.0]), (2, [0.0, 0.0])], "zero-norm centroid vector"),
+        ([(1, [1.0, 0.0]), (2, [0.0, 1.0, 0.0])], "differ in length"),
+        ([(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0])], "differ in length"),
+    ],
+    ids=["zero_norm", "longer_centroid", "shorter_centroid"],
+)
+def test_rank_cids_arrow_zero_norm_centroid_raises(cents, match):
+    """A zero-norm centroid or a ragged centroid list fails loudly when
+    the ranker is built, instead of ranking NaN cosines last, ignoring
+    trailing coordinates, or raising an opaque IndexError inside the
+    worker."""
     from claims_data_spark.operators.similarity import _rank_cids_arrow
 
-    with pytest.raises(ValueError, match="zero-norm centroid vector"):
-        _rank_cids_arrow([(1, [1.0, 0.0]), (2, [0.0, 0.0])])
+    with pytest.raises(ValueError, match=match):
+        _rank_cids_arrow(cents)
 
 
 @pytest.mark.parametrize(
@@ -195,11 +220,8 @@ def test_rank_cids_arrow_rejects_bad_vector_rows(spark, vec):
 
 def test_rank_cids_arrow_negative_zero_ties_to_lower_cid(spark):
     """Cosines of -0.0 and +0.0 tie (Spark compares them equal), so the
-    lower centroid id ranks first, as in _attach_centroid_rank."""
-    from claims_data_spark.operators.similarity import (
-        _attach_centroid_rank,
-        _rank_cids_arrow,
-    )
+    lower centroid id ranks first, as in the Python twin."""
+    from claims_data_spark.operators.similarity import _rank_cids_arrow
 
     # against [1, 0]: cid 1 gives cos -0.0 (rank key +0.0), cid 2 gives
     # cos +0.0 (rank key -0.0) — IEEE total order would put cid 2 first
@@ -208,10 +230,8 @@ def test_rank_cids_arrow_negative_zero_ties_to_lower_cid(spark):
         [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
     arrow = df.select(_rank_cids_arrow(cents)(F.col("embedding"))).first()[0]
-    sql = _attach_centroid_rank(df, cents, "embedding", "_cr").select(
-        F.transform("_cr", lambda s: s["cid"])
-    ).first()[0]
-    assert list(arrow) == list(sql) == [1, 2]
+    assert list(arrow) == _py_rank_cids([1.0, 0.0], cents) == [1, 2]
+
 
 def test_multimodal_feature_plumbing(spark):
     media = spark.createDataFrame(

@@ -302,6 +302,9 @@ def test_semantic_dedup_pairs_keyed_on_cluster(spark, sf_dir):
     plan = _plan(out)
     assert "CartesianProduct" not in plan, plan
     assert "centroid_id" in plan, plan
+    # assignment is the Arrow ranker, not centroid coefficients
+    # compiled into the plan as an element_at(...) literal tree
+    assert "element_at(" not in plan, plan
 
 
 def test_no_generator_filter_pushed_below_spread_exchange(spark, sf_dir):
@@ -610,20 +613,20 @@ def test_fuzzy_decontaminate_bench_side_broadcast(spark, sf_dir):
 
 
 def test_diversity_sample_assignment_map_only(spark, sf_dir):
-    # nearest-centroid assignment is an unrolled-codegen projection —
-    # no join, no Python; the only exchanges are the rank windows
-    # (1 single-phase, 2 with the salted pre-prune)
+    # nearest-centroid assignment is one map-only Arrow ranker node —
+    # no join; the only exchanges are the rank windows (1 single-phase,
+    # 2 with the salted pre-prune)
     from claims_data_spark.operators.similarity import diversity_sample
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    cents = [[1.0] + [0.0] * 15, [0.0, 1.0] + [0.0] * 14]
+    cents = [[1.0] + [0.0] * 63, [0.0, 1.0] + [0.0] * 62]
     one = diversity_sample(emb, "v", "vec_id", cents, 5)
     plan = _plan(one)
     assert "Join" not in plan, plan
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" in plan, plan
     assert _n_exchanges(plan) == 1, plan
     two = diversity_sample(emb, "v", "vec_id", cents, 5, two_phase=True)
     assert _n_exchanges(_plan(two)) == 2

@@ -1,6 +1,6 @@
 """Engine code leaves the shared session as the caller configured it:
 no session-conf writes and no cache entries left behind by the
-dense-id builders."""
+dense-id builders or the centroid rankers."""
 
 from __future__ import annotations
 
@@ -59,4 +59,26 @@ def test_dense_id_builders_leave_no_cached_plans(spark):
         "sa int, sb int, tro int, deliv int",
     )
     build_preg_episodes(endpoints).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_centroid_rankers_leave_no_cached_plans(spark):
+    """semantic_dedup and diversity_sample register nothing in the
+    session's cache manager: the Arrow ranker's assignment is
+    recomputed by each consumer, never persisted without an owner."""
+    from claims_data_spark.operators.similarity import (
+        diversity_sample,
+        semantic_dedup,
+    )
+
+    spark.catalog.clearCache()
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.999, 0.01, 0.0]),
+         (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    semantic_dedup(df, centroid_ids=[0, 2], threshold=0.98).collect()
+    diversity_sample(
+        df, "embedding", "vec_id", [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]], 1
+    ).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

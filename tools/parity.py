@@ -16,6 +16,7 @@ quick triage of genuine value bugs.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import traceback
 
@@ -113,10 +114,10 @@ def main():
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
+    # import the engine from the checkout this script lives in
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
-    import os
     if os.environ.get("PARITY_VANILLA"):
         # dress rehearsal for the driver's own gate: a PLAIN session
         # (Spark 4 ANSI defaults, no tuned configs) — queries must not
