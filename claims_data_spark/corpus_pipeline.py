@@ -38,10 +38,12 @@ survivor-sized frames.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-QaResult = tuple[str, bool, str]
+from claims_data_spark.qa import QaResult, gate as qa_gate
 
 
 def run_corpus_pipeline(
@@ -109,11 +111,7 @@ def run_corpus_pipeline(
     rejected: dict[str, int] = {}
     _persisted: list[DataFrame] = []
 
-    def gate(stage: str, *checks: QaResult) -> None:
-        for c in checks:
-            qa.append((stage, c))
-            if strict_qa and not c[1]:
-                raise AssertionError(f"QA FAIL {stage}: {c[0]} ({c[2]})")
+    gate = partial(qa_gate, qa, strict=strict_qa)
 
     def checkpointed(df: DataFrame) -> DataFrame:
         # every stage boundary is read multiple times (its own QA

@@ -15,22 +15,23 @@ log table like ``metadata.qa_mcaid``.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from claims_data_spark.qa import (
+    InParent,
+    QaResult,
     fused_table_qa,
+    gate as qa_gate,
     qa_apcd_claim_provider,
-    qa_ids_in_elig,
     qa_mcaid_claim_icdcm_header,
     qa_mcaid_claim_line,
     qa_mcaid_claim_pharm,
     qa_mcaid_claim_procedure,
     qa_mcaid_mcare_claim_ccw,
     qa_mcare_elig_timevar,
-    QaResult,
-    check_referential,
     run_qa,
     timevar_golden_qa,
 )
@@ -89,29 +90,22 @@ def run_mcaid_pipeline(
     results and continues.
     """
     qa: list[tuple[str, QaResult]] = []
-
-    def gate(table: str, *checks: QaResult) -> None:
-        for c in checks:
-            qa.append((table, c))
-            if strict_qa and not c[1]:
-                raise AssertionError(f"QA FAIL {table}: {c[0]} ({c[2]})")
+    gate = partial(qa_gate, qa, strict=strict_qa)
 
     demo = build_elig_demo(raw_elig)
     gate("elig_demo", *fused_table_qa(demo, unique_keys=["id_mcaid"]))
 
     timevar = build_elig_timevar(raw_elig, ref_rac, ref_address, ref_geocode)
     # the reference's full table-level gate
-    # (qa_stage.mcaid_elig_timevar.R): segment uniqueness + interval
-    # validity + overlap in ONE action, plus the member-count and
-    # date-range golden-record spot checks against the raw extract
+    # (qa_stage.mcaid_elig_timevar.R): one aggregate over the table,
+    # one over the raw extract for the golden-record spot checks
     gate("elig_timevar", *timevar_golden_qa(timevar, raw_elig))
 
     elig_month = build_elig_month(timevar)
 
-    line = build_claim_line(raw_claim)
-    gate("claim_line", *fused_table_qa(line, unique_keys=["claim_line_id"]))
     # per-table reference suites (round 6): qa_stage.mcaid_claim_line/
     # pharm/procedure/icdcm_header.R, each one fused aggregate
+    line = build_claim_line(raw_claim)
     gate("claim_line", *qa_mcaid_claim_line(line, demo))
     icdcm = build_claim_icdcm_header(raw_claim)
     if ref_icdcm is not None:
@@ -120,7 +114,9 @@ def run_mcaid_pipeline(
             *qa_mcaid_claim_icdcm_header(icdcm, demo, ref_icdcm),
         )
     else:
-        gate("claim_icdcm_header", *qa_ids_in_elig(icdcm, demo))
+        gate("claim_icdcm_header", *fused_table_qa(
+            icdcm, checks={"ids-in-elig": InParent(demo, "id_mcaid")}
+        ))
     procedure = build_claim_procedure(raw_claim)
     gate("claim_procedure", *qa_mcaid_claim_procedure(procedure, demo))
     pharm = build_claim_pharm(raw_claim)
@@ -129,21 +125,13 @@ def run_mcaid_pipeline(
     header = build_claim_header(
         raw_claim, icdcm, ref_xwalk, ref_hedis, ref_telehealth, ref_icdcm
     )
-    # uniqueness + event-id invariants fused into one action; the
-    # referential check is inherently a join so it stays separate
-    gate(
-        "claim_header",
-        *fused_table_qa(
-            header,
-            unique_keys=["claim_header_id"],
-            event_id="ed_pophealth_id",
-            person_id="id_mcaid",
-        ),
-        check_referential(
-            header.select("id_mcaid"), timevar.select("id_mcaid"), ["id_mcaid"],
-            name="claim-members-in-elig",
-        ),
-    )
+    gate("claim_header", *fused_table_qa(
+        header,
+        unique_keys=["claim_header_id"],
+        event_ids=["ed_pophealth_id"],
+        person_id="id_mcaid",
+        checks={"claim-members-in-elig": InParent(timevar, "id_mcaid")},
+    ))
 
     tables = {
         "elig_demo": demo,
@@ -255,13 +243,9 @@ def run_mcaid_mcare_pipeline(
     def child(name: str, builder) -> None:
         if name in mcaid_tables and name in mcare_tables:
             out = builder(mcaid_tables[name], mcare_tables[name], xwalk)
-            ok, counts = combined_child_union_qa(
+            qa.append((f"mcaid_mcare_{name}", combined_child_union_qa(
                 out, mcaid_tables[name], mcare_tables[name]
-            )
-            qa.append((
-                f"mcaid_mcare_{name}",
-                (f"row count == mcaid + mcare {counts}", ok),
-            ))
+            )))
             tables[f"mcaid_mcare_{name}"] = out
 
     child("claim_line", build_mcaid_mcare_union)
@@ -358,12 +342,7 @@ def run_apcd_pipeline(
 
     tables: dict[str, DataFrame] = {}
     qa: list[tuple[str, QaResult]] = []
-
-    def gate(table: str, checks: list) -> None:
-        for res in checks:
-            qa.append((table, res))
-            if strict:
-                assert res[1], f"QA FAIL {table}: {res[0]}"
+    gate = partial(qa_gate, qa, strict=strict)
 
     demo = None
     if eligibility is not None:
@@ -411,8 +390,8 @@ def run_apcd_pipeline(
         )
         tables["apcd_claim_icdcm_header"] = icdcm_child
         gate("apcd_claim_icdcm_header",
-             qa_apcd_child(icdcm_child, elig_demo=demo,
-                           not_null_col="icdcm_norm"))
+             *qa_apcd_child(icdcm_child, elig_demo=demo,
+                            not_null_col="icdcm_norm"))
     if claim_procedure_raw is not None:
         procedure_child = build_apcd_claim_procedure(
             claim_procedure_raw, claim_header_raw
@@ -425,7 +404,7 @@ def run_apcd_pipeline(
         # qa_stage.apcd_claim_provider.sql generalized: projection row
         # parity with raw, provider id non-null, members in elig
         gate("apcd_claim_provider",
-             qa_apcd_claim_provider(
+             *qa_apcd_claim_provider(
                  tables["apcd_claim_provider"], claim_provider_raw,
                  elig_demo=demo,
              ))
@@ -445,7 +424,7 @@ def run_apcd_pipeline(
     )
     tables["apcd_claim_header"] = header
     gate("apcd_claim_header",
-         qa_apcd_claim_header(header, claim_header_raw, elig_demo=demo))
+         *qa_apcd_claim_header(header, claim_header_raw, elig_demo=demo))
 
     if ccw_lookup_rows and ref_icdcm is not None \
             and claim_icdcm_raw is not None:
@@ -513,27 +492,22 @@ def run_mcare_pipeline(
 
     tables: dict[str, DataFrame] = {}
     qa: list[tuple[str, QaResult]] = []
-
-    def gate(table: str, checks: list) -> None:
-        for res in checks:
-            qa.append((table, res))
-            if strict:
-                assert res[1], f"QA FAIL {table}: {res[0]}"
+    gate = partial(qa_gate, qa, strict=strict)
 
     demo = build_mcare_elig_demo(
         bene_enrollment, ref_geo_kc_zip=ref_geo_kc_zip
     )
     tables["mcare_elig_demo"] = demo
     gate("mcare_elig_demo",
-         fused_table_qa(demo, unique_keys=["id_mcare"]))
+         *fused_table_qa(demo, unique_keys=["id_mcare"]))
     tables["mcare_elig_timevar"] = build_mcare_elig_timevar(
         bene_enrollment, elig_demo=demo, ref_geo_kc_zip=ref_geo_kc_zip
     )
     # the reference's full timevar suite (qa_stage.mcare_elig_timevar.R):
     # dup-row/interval/overlap fused + distinct-id parity with MBSF
     gate("mcare_elig_timevar",
-         qa_mcare_elig_timevar(tables["mcare_elig_timevar"],
-                               bene_enrollment))
+         *qa_mcare_elig_timevar(tables["mcare_elig_timevar"],
+                                bene_enrollment))
     tables["mcare_elig_month"] = build_mcare_elig_month(
         bene_enrollment, elig_demo=demo, ref_geo_kc_zip=ref_geo_kc_zip
     )
@@ -602,7 +576,7 @@ def run_mcare_pipeline(
             ref_xwalk=ref_xwalk, ref_pc_oregon=ref_pc_oregon,
         )
         tables["mcare_claim_header"] = header
-        gate("mcare_claim_header", mcare_header_qa(header))
+        gate("mcare_claim_header", *mcare_header_qa(header))
 
     if header is not None and ref_icdcm is not None and ccw_lookup_rows:
         tables["mcare_claim_ccw"] = build_mcare_claim_ccw(

@@ -4,138 +4,185 @@ scripts re-expressed as DataFrame property checks, e.g.
 
 Each check returns a (name, passed, detail) tuple; ``run_qa`` collects
 them into a QA-log DataFrame like the reference's
-``metadata.qa_mcaid`` table.
+``metadata.qa_mcaid`` table. ``fused_table_qa`` is the one engine for
+a table's gate: key uniqueness, interval and event-id invariants,
+row-level violation flags, membership in parent tables and comparisons
+with the raw extract all fold into ONE aggregate over the table, plus
+at most one aggregate over the raw extract. ``gate`` records a gate's
+results and stops a strict load on the first FAIL.
 """
 
 from __future__ import annotations
 
 import datetime
+from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 QaResult = tuple[str, bool, str]
 
 
-def check_keys_unique(df: DataFrame, keys: list[str], name: str = "") -> QaResult:
-    """Distinct-rows == total-rows on the key columns
-    (``qa_stage.mcaid_elig_timevar.R:152-191``)."""
-    total = df.count()
-    distinct = df.select(*keys).distinct().count()
-    return (
-        name or f"unique({','.join(keys)})",
-        total == distinct,
-        f"total={total} distinct={distinct}",
+class InParent(NamedTuple):
+    """Membership check: every row's ``id_col`` occurs in ``parent``
+    (only the rows matching ``where``, when given). The parent's
+    distinct ids join in as a broadcast marker column, so the check is
+    one more row flag in the gate's aggregate and its detail counts
+    orphan rows (``load_stage.apcd_claim_header.R:1129-1148``; check 1
+    of every ``qa_stage.mcaid_claim_*.R``, 'IDs are all found in the
+    elig tables')."""
+
+    parent: DataFrame
+    id_col: str
+    where: Column | None = None
+
+
+class Stat(NamedTuple):
+    """Check judged from aggregates: ``aggs`` (aliased, aliases unique
+    within the gate) run in the gate's aggregate over the table,
+    ``raw_aggs`` in its one aggregate over the raw extract, and
+    ``verdict`` maps the merged result row to (passed, detail).
+    ``cols`` are (name, expression) columns attached per row before the
+    aggregate — window expressions allowed."""
+
+    aggs: tuple[Column, ...]
+    verdict: Callable[[dict], tuple[bool, str]]
+    raw_aggs: tuple[Column, ...] = ()
+    cols: tuple[tuple[str, Column], ...] = ()
+
+
+def gate(
+    qa: list[tuple[str, QaResult]], table: str, *checks: QaResult, strict: bool
+) -> None:
+    """Record ``checks`` under ``table`` in ``qa``; when ``strict``,
+    stop the load on the first FAIL like the reference's master
+    scripts. The raise is explicit so ``python -O`` keeps the gate."""
+    for c in checks:
+        qa.append((table, c))
+        if strict and not c[1]:
+            raise AssertionError(f"QA FAIL {table}: {c[0]} ({c[2]})")
+
+
+def one_person(event_id: str, person_id: str) -> Stat:
+    """No event id spans more than one person
+    (``load_stage.apcd_claim_header.R:1165-1212``): a per-row window
+    flag, its max in the aggregate."""
+    flag = f"_multi_{event_id}"
+    multi = F.when(
+        F.col(event_id).isNotNull()
+        & (F.size(F.collect_set(person_id).over(Window.partitionBy(event_id))) > 1),
+        1,
+    ).otherwise(0)
+    return Stat(
+        aggs=(F.max(flag).alias(flag),),
+        verdict=lambda r: (
+            (r[flag] or 0) == 0, f"multi-person-events={r[flag] or 0}"
+        ),
+        cols=((flag, multi),),
     )
 
 
-def check_referential(
-    child: DataFrame, parent: DataFrame, keys: list[str], name: str = ""
-) -> QaResult:
-    """Every child key exists in the parent — left-anti must be empty
-    (``load_stage.apcd_claim_header.R:1129-1148``)."""
-    orphans = child.select(*keys).distinct().join(
-        parent.select(*keys).distinct(), keys, "left_anti"
-    ).count()
-    return (name or f"referential({','.join(keys)})", orphans == 0, f"orphans={orphans}")
+def _dense(event_id: str) -> Stat:
+    """Dense ids skip no values (``load_stage.apcd_claim_header.R:1213-1225``)."""
+    n, lo, hi = (f"_{k}_{event_id}" for k in ("n", "lo", "hi"))
 
+    def verdict(r: dict) -> tuple[bool, str]:
+        dense = r[n] == 0 or (r[lo] == 1 and r[hi] == r[n])
+        return bool(dense), f"n={r[n]} lo={r[lo]} hi={r[hi]}"
 
-def check_event_id_single_person(
-    df: DataFrame, event_id: str, person_id: str, name: str = ""
-) -> QaResult:
-    """No event id spans >1 person
-    (``load_stage.apcd_claim_header.R:1165-1212``)."""
-    bad = (
-        df.filter(F.col(event_id).isNotNull())
-        .groupBy(event_id)
-        .agg(F.countDistinct(person_id).alias("n"))
-        .filter(F.col("n") > 1)
-        .count()
-    )
-    return (name or f"one-person({event_id})", bad == 0, f"violations={bad}")
-
-
-def check_event_ids_dense(df: DataFrame, event_id: str, name: str = "") -> QaResult:
-    """Dense ids skip no values (``:1213-1225``)."""
-    agg = df.filter(F.col(event_id).isNotNull()).agg(
-        F.countDistinct(event_id).alias("n"),
-        F.min(event_id).alias("lo"),
-        F.max(event_id).alias("hi"),
-    ).collect()[0]
-    dense = agg["n"] == 0 or (agg["lo"] == 1 and agg["hi"] == agg["n"])
-    return (
-        name or f"dense({event_id})",
-        bool(dense),
-        f"n={agg['n']} lo={agg['lo']} hi={agg['hi']}",
+    return Stat(
+        aggs=(
+            F.countDistinct(event_id).alias(n),
+            F.min(event_id).alias(lo),
+            F.max(event_id).alias(hi),
+        ),
+        verdict=verdict,
     )
 
 
-def check_intervals_valid(
-    df: DataFrame, from_col: str = "from_date", to_col: str = "to_date", name: str = ""
-) -> QaResult:
-    """from <= to on every row."""
-    bad = df.filter(F.col(from_col) > F.col(to_col)).count()
-    return (name or "intervals-valid", bad == 0, f"violations={bad}")
-
-
-def check_no_overlap_within_person(
-    df: DataFrame, id_cols: list[str], from_col: str = "from_date",
-    to_col: str = "to_date", name: str = "",
-) -> QaResult:
-    """Per-person interval rows must not overlap (timevar invariant)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*id_cols).orderBy(from_col)
-    bad = (
-        df.withColumn("_prev_to", F.lag(to_col).over(w))
-        .filter(F.col("_prev_to") >= F.col(from_col))
-        .count()
+def _unique(keys: list[str]) -> Stat:
+    """Distinct keys == total rows
+    (``qa_stage.mcaid_elig_timevar.R:152-191``). ``countDistinct``
+    skips a row with a NULL key, so such a row counts as a violation."""
+    return Stat(
+        aggs=(
+            F.count(F.lit(1)).alias("_total"),
+            F.countDistinct(*keys).alias("_distinct_keys"),
+        ),
+        verdict=lambda r: (
+            r["_total"] == r["_distinct_keys"],
+            f"total={r['_total']} distinct={r['_distinct_keys']}",
+        ),
     )
-    return (name or "no-overlap", bad == 0, f"violations={bad}")
 
 
-def check_member_count_match(
-    built: DataFrame,
-    raw: DataFrame,
-    built_id: str,
-    raw_id: str,
-    name: str = "member-count-match",
-) -> QaResult:
+def _violations(alias: str, r: dict) -> tuple[bool, str]:
+    bad = r[alias] or 0
+    return bad == 0, f"violations={bad}"
+
+
+def row_count_vs_raw(label: str) -> Stat:
+    """The table keeps exactly the raw extract's rows (pass the
+    extract, filtered as the table's build filters it, as ``raw``)."""
+    return Stat(
+        aggs=(F.count(F.lit(1)).alias("_rows"),),
+        raw_aggs=(F.count(F.lit(1)).alias("_raw_rows"),),
+        verdict=lambda r: (
+            r["_rows"] == r["_raw_rows"],
+            f"{label}={r['_rows']} raw={r['_raw_rows']}",
+        ),
+    )
+
+
+def _distinct_ids_match(id_col: str, raw_id_col: str) -> Stat:
     """Distinct member count of the built table equals the raw
-    extract's (``qa_stage.mcaid_elig_timevar.R:109-151``). Two partial
-    countDistinct aggregates — no join, no full-width scan."""
-    b = built.select(F.countDistinct(built_id).alias("n")).collect()[0]["n"]
-    r = raw.select(F.countDistinct(raw_id).alias("n")).collect()[0]["n"]
-    return (name, b == r, f"built={b} raw={r}")
+    extract's (``qa_stage.mcaid_elig_timevar.R:109-151``)."""
+    return Stat(
+        aggs=(F.countDistinct(id_col).alias("_ids"),),
+        raw_aggs=(F.countDistinct(raw_id_col).alias("_raw_ids"),),
+        verdict=lambda r: (
+            r["_ids"] == r["_raw_ids"], f"built={r['_ids']} raw={r['_raw_ids']}"
+        ),
+    )
 
 
-def check_date_range_within(
-    built: DataFrame,
-    raw: DataFrame,
-    from_col: str = "from_date",
-    to_col: str = "to_date",
-    raw_month_col: str = "CLNDR_YEAR_MNTH",
-    name: str = "date-range",
-) -> QaResult:
+def _month_start(yyyymm) -> datetime.date:
+    s = str(yyyymm)
+    return datetime.date(int(s[:4]), int(s[4:6]), 1)
+
+
+def _month_end(yyyymm) -> datetime.date:
+    s = str(yyyymm)
+    y, m = int(s[:4]), int(s[4:6])
+    return datetime.date(y + m // 12, m % 12 + 1, 1) - datetime.timedelta(days=1)
+
+
+def _date_range_within(from_col: str, to_col: str, raw_month_col: str) -> Stat:
     """Built from/to dates fall inside the raw extract's yyyymm month
     range (``qa_stage.mcaid_elig_timevar.R:190-243``): min(from) >=
-    first day of min month, max(to) <= last day of max month."""
-    b = built.agg(
-        F.min(from_col).alias("lo"), F.max(to_col).alias("hi")
-    ).collect()[0]
-    r = raw.agg(
-        F.min(raw_month_col).alias("lo"), F.max(raw_month_col).alias("hi")
-    ).collect()[0]
-    raw_lo = datetime.date(int(str(r["lo"])[:4]), int(str(r["lo"])[4:6]), 1)
-    hi_y, hi_m = int(str(r["hi"])[:4]), int(str(r["hi"])[4:6])
-    if hi_m == 12:
-        raw_hi = datetime.date(hi_y + 1, 1, 1) - datetime.timedelta(days=1)
-    else:
-        raw_hi = datetime.date(hi_y, hi_m + 1, 1) - datetime.timedelta(days=1)
-    ok = b["lo"] >= raw_lo and b["hi"] <= raw_hi
-    return (
-        name, bool(ok),
-        f"built=[{b['lo']},{b['hi']}] raw=[{raw_lo},{raw_hi}]",
+    first day of min month, max(to) <= last day of max month. An empty
+    side has no range, so the check FAILs and names it."""
+
+    def verdict(r: dict) -> tuple[bool, str]:
+        empty = [
+            side for side, lo in (("built", r["_from_lo"]), ("raw", r["_month_lo"]))
+            if lo is None
+        ]
+        if empty:
+            return False, f"empty: {', '.join(empty)}"
+        raw_lo, raw_hi = _month_start(r["_month_lo"]), _month_end(r["_month_hi"])
+        ok = r["_from_lo"] >= raw_lo and r["_to_hi"] <= raw_hi
+        return ok, f"built=[{r['_from_lo']},{r['_to_hi']}] raw=[{raw_lo},{raw_hi}]"
+
+    return Stat(
+        aggs=(F.min(from_col).alias("_from_lo"), F.max(to_col).alias("_to_hi")),
+        raw_aggs=(
+            F.min(raw_month_col).alias("_month_lo"),
+            F.max(raw_month_col).alias("_month_hi"),
+        ),
+        verdict=verdict,
     )
 
 
@@ -148,22 +195,21 @@ def timevar_golden_qa(
 ) -> list[QaResult]:
     """The reference's elig_timevar table-level gate
     (``qa_stage.mcaid_elig_timevar.R``): distinct-segment uniqueness,
-    member-count parity with the raw extract, and the date-range
-    containment spot check — the automatable part of its
-    golden-record section."""
-    out = fused_table_qa(
+    interval validity, per-person overlap, member-count parity with the
+    raw extract, and the date-range containment spot check — the
+    automatable part of its golden-record section. One aggregate over
+    the table, one over the raw extract."""
+    return fused_table_qa(
         timevar,
         unique_keys=[id_col, "from_date", "to_date"],
         interval_cols=("from_date", "to_date"),
         overlap_ids=[id_col],
+        checks={
+            "member-count-match": _distinct_ids_match(id_col, raw_id_col),
+            "date-range": _date_range_within("from_date", "to_date", raw_month_col),
+        },
+        raw=raw_elig,
     )
-    out.append(
-        check_member_count_match(timevar, raw_elig, id_col, raw_id_col)
-    )
-    out.append(
-        check_date_range_within(timevar, raw_elig, raw_month_col=raw_month_col)
-    )
-    return out
 
 
 def fused_table_qa(
@@ -171,112 +217,74 @@ def fused_table_qa(
     unique_keys: list[str] | None = None,
     interval_cols: tuple[str, str] | None = None,
     overlap_ids: list[str] | None = None,
-    event_id: str | None = None,
-    person_id: str | None = None,
-    extra_flags: dict[str, F.Column] | None = None,
     event_ids: list[str] | None = None,
+    person_id: str | None = None,
+    checks: dict[str, Column | InParent | Stat] | None = None,
+    raw: DataFrame | None = None,
 ) -> list[QaResult]:
-    """Run every per-table invariant in ONE Spark action.
+    """Run a table's whole QA gate as ONE aggregate over the table,
+    plus one over ``raw`` when a check compares against the raw
+    extract. Every table gate in the engine runs through here.
 
-    The per-check helpers above each trigger 1-2 jobs; a 5-check gate
-    on a warehouse-scale table becomes ~8 full scans. This fuses them:
-    row-local violations become flag columns, per-person overlap and
+    Row-local violations become flag columns, per-person overlap and
     per-event single-person become window flags (each window shares or
-    adds one shuffle, not one scan), and everything collapses in a
-    single ``agg`` — count, countDistinct on keys, sums of violation
-    flags (reference QA suites: ``qa_stage.mcaid_elig_timevar.R``,
+    adds one shuffle, not one scan), each parent table joins in as a
+    broadcast membership marker, and everything collapses in a single
+    ``agg`` (reference QA suites: ``qa_stage.mcaid_elig_timevar.R``,
     ``load_stage.apcd_claim_header.R:964-1253``).
 
-    ``extra_flags`` maps check name -> boolean VIOLATION predicate
-    evaluated per row in the same pass (the predicate may reference
-    window-derived columns the caller attached beforehand).
-
-    ``event_ids`` generalizes ``event_id`` to several id families in
-    the SAME action (one window per family, one shared agg) — the
-    mcare / combined headers carry four (pc_visit / inpatient /
-    ed_perform / ed_pophealth).
+    The shortcuts yield, in this order: ``unique(keys)``,
+    ``intervals-valid``, ``no-overlap`` (rows of one ``overlap_ids``
+    ordered by interval start), then per family in ``event_ids``
+    ``one-person(ev)`` (when ``person_id`` is given) and ``dense(ev)``.
+    ``checks`` appends named checks in its own order: a boolean Column
+    is a per-row VIOLATION predicate (it may hold window expressions),
+    an ``InParent`` a membership check, a ``Stat`` any check judged
+    from aggregates.
     """
-    from pyspark.sql import Window
-
-    work = df
-    aggs = [F.count(F.lit(1)).alias("_total")]
+    frm, to = interval_cols or ("from_date", "to_date")
+    specs: dict[str, Column | InParent | Stat] = {}
     if unique_keys:
-        aggs.append(
-            F.countDistinct(*[F.col(k) for k in unique_keys]).alias("_distinct_keys")
-        )
+        specs[f"unique({','.join(unique_keys)})"] = _unique(unique_keys)
     if interval_cols:
-        frm, to = interval_cols
-        work = work.withColumn(
-            "_iv_bad", (F.col(frm) > F.col(to)).cast("int")
-        )
-        aggs.append(F.sum("_iv_bad").alias("_iv_bad"))
+        specs["intervals-valid"] = F.col(frm) > F.col(to)
     if overlap_ids:
-        frm, to = interval_cols or ("from_date", "to_date")
         w = Window.partitionBy(*overlap_ids).orderBy(frm)
-        work = work.withColumn(
-            "_ov_bad",
-            (F.lag(to).over(w) >= F.col(frm)).cast("int"),
-        )
-        aggs.append(F.sum(F.coalesce("_ov_bad", F.lit(0))).alias("_ov_bad"))
-    ev_list = list(event_ids or ([event_id] if event_id else []))
-    for j, ev in enumerate(ev_list):
+        specs["no-overlap"] = F.lag(to).over(w) >= F.col(frm)
+    for ev in event_ids or []:
         if person_id:
-            we = Window.partitionBy(ev)
-            work = work.withColumn(
-                f"_ev_multi_{j}",
-                F.when(
-                    F.col(ev).isNotNull()
-                    & (F.size(F.collect_set(person_id).over(we)) > 1),
-                    1,
-                ).otherwise(0),
-            )
-            aggs.append(F.max(f"_ev_multi_{j}").alias(f"_ev_multi_{j}"))
-        nn = F.when(F.col(ev).isNotNull(), F.col(ev))
-        aggs += [
-            F.countDistinct(nn).alias(f"_ev_n_{j}"),
-            F.min(nn).alias(f"_ev_lo_{j}"),
-            F.max(nn).alias(f"_ev_hi_{j}"),
-        ]
-    for i, (fname, pred) in enumerate((extra_flags or {}).items()):
-        work = work.withColumn(f"_xf_{i}", pred.cast("int"))
-        aggs.append(F.sum(F.coalesce(f"_xf_{i}", F.lit(0))).alias(f"_xf_{i}"))
+            specs[f"one-person({ev})"] = one_person(ev, person_id)
+        specs[f"dense({ev})"] = _dense(ev)
+    specs.update(checks or {})
 
-    row = work.agg(*aggs).collect()[0]
-    out: list[QaResult] = []
-    if unique_keys:
-        out.append(
-            (
-                f"unique({','.join(unique_keys)})",
-                row["_total"] == row["_distinct_keys"],
-                f"total={row['_total']} distinct={row['_distinct_keys']}",
+    work, aggs, raw_aggs, verdicts = df, [], [], []
+    for i, (name, check) in enumerate(specs.items()):
+        if isinstance(check, InParent):
+            marker = f"_in_{i}"
+            ids = check.parent.select(check.id_col).distinct().withColumn(
+                marker, F.lit(1)
             )
-        )
-    if interval_cols:
-        out.append(
-            ("intervals-valid", (row["_iv_bad"] or 0) == 0, f"violations={row['_iv_bad'] or 0}")
-        )
-    if overlap_ids:
-        out.append(
-            ("no-overlap", (row["_ov_bad"] or 0) == 0, f"violations={row['_ov_bad'] or 0}")
-        )
-    for j, ev in enumerate(ev_list):
-        if person_id:
-            out.append(
-                (f"one-person({ev})", (row[f"_ev_multi_{j}"] or 0) == 0,
-                 f"multi-person-events={row[f'_ev_multi_{j}'] or 0}")
+            work = work.join(F.broadcast(ids), check.id_col, "left")
+            orphan = F.col(marker).isNull()
+            check = orphan if check.where is None else check.where & orphan
+        if isinstance(check, Column):
+            flag = f"_flag_{i}"
+            check = Stat(
+                aggs=(F.sum(F.when(F.col(flag), 1).otherwise(0)).alias(flag),),
+                verdict=partial(_violations, flag),
+                cols=((flag, check),),
             )
-        dense = row[f"_ev_n_{j}"] == 0 or (
-            row[f"_ev_lo_{j}"] == 1 and row[f"_ev_hi_{j}"] == row[f"_ev_n_{j}"]
-        )
-        out.append(
-            (f"dense({ev})", bool(dense),
-             f"n={row[f'_ev_n_{j}']} lo={row[f'_ev_lo_{j}']} "
-             f"hi={row[f'_ev_hi_{j}']}")
-        )
-    for i, fname in enumerate(extra_flags or {}):
-        bad = row[f"_xf_{i}"] or 0
-        out.append((fname, bad == 0, f"violations={bad}"))
-    return out
+        for col, expr in check.cols:
+            work = work.withColumn(col, expr)
+        aggs += check.aggs
+        raw_aggs += check.raw_aggs
+        verdicts.append((name, check.verdict))
+    if not verdicts:
+        return []
+    row = work.agg(*aggs).collect()[0].asDict()
+    if raw_aggs:
+        row.update(raw.agg(*raw_aggs).collect()[0].asDict())
+    return [(name, *verdict(row)) for name, verdict in verdicts]
 
 
 def run_qa(spark: SparkSession, checks: list[QaResult], table: str) -> DataFrame:
@@ -362,18 +370,8 @@ def ccw_table_qa(
     catalog, encounter date ranges must be ordered, and per-condition
     prevalence is computed for the analyst review step (the
     reference's compare-to-APCD-estimates item) — all from ONE
-    aggregation pass plus one tiny distinct.
+    per-condition aggregation pass.
     """
-    got = {
-        r[0] for r in ccw.select(cond_col).distinct().collect()
-    }
-    missing = sorted(set(expected_conditions) - got)
-    extra = sorted(got - set(expected_conditions))
-    results: list[QaResult] = [(
-        "distinct-conditions-match",
-        not missing and not extra,
-        f"missing={missing} extra={extra}",
-    )]
     stats = (
         ccw.groupBy(cond_col)
         .agg(
@@ -387,11 +385,16 @@ def ccw_table_qa(
         )
         .collect()
     )
+    got = {r[cond_col] for r in stats}
+    missing = sorted(set(expected_conditions) - got)
+    extra = sorted(got - set(expected_conditions))
     bad_order = sum(int(r["bad_order"] or 0) for r in stats)
-    results.append((
-        "encounter-dates-ordered", bad_order == 0,
-        f"{bad_order} rows with first>last",
-    ))
+    results: list[QaResult] = [
+        ("distinct-conditions-match", not missing and not extra,
+         f"missing={missing} extra={extra}"),
+        ("encounter-dates-ordered", bad_order == 0,
+         f"{bad_order} rows with first>last"),
+    ]
     if population:
         prev = {
             r[cond_col]: round(100.0 * r["persons"] / population, 2)
@@ -497,11 +500,12 @@ def refresh_acceptance_qa(
 
 # ---------------------------------------------------------------------------
 # Per-table claim-family QA gates (round 6): the remaining reference
-# suites — qa_stage.mcaid_claim_line/pharm/procedure/icdcm_header/
-# naloxone/preg_episode.R — each fused into ONE aggregate action
-# (broadcast membership markers + row-local format flags + conditional
-# min/max/countDistinct collapse together), plus the qa_final.apcd_*
-# stage-vs-final promotion gate.
+# suites — qa_stage.mcaid_claim_line/pharm/procedure/icdcm_header.R —
+# each one ``fused_table_qa`` action (broadcast membership markers +
+# row-local format flags + conditional min/max/countDistinct collapse
+# together), plus the qa_final.apcd_* stage-vs-final promotion gate.
+# The single-check naloxone/preg_episode suites are
+# ``fused_table_qa(df, checks={"ids-in-elig": InParent(elig, id_col)})``.
 # ---------------------------------------------------------------------------
 
 def _digits_only(col: F.Column) -> F.Column:
@@ -510,52 +514,30 @@ def _digits_only(col: F.Column) -> F.Column:
     return ~col.rlike("[^0-9]")
 
 
-def _with_elig_marker(df: DataFrame, elig: DataFrame, id_col: str):
-    """Left-join a broadcast membership marker from the elig-demo ids
-    (qa_stage.mcaid_claim_*.R check 1: 'IDs are all found in the elig
-    tables'). Marker form so the violation count folds into the same
-    aggregate as every other flag."""
-    ids = elig.select(F.col(id_col)).distinct().withColumn(
-        "_in_elig", F.lit(1)
-    )
-    return df.join(F.broadcast(ids), id_col, "left")
-
-
 def qa_mcaid_claim_line(
     line: DataFrame,
     elig: DataFrame,
     raw_distinct_lines: int | None = None,
     id_col: str = "id_mcaid",
 ) -> list[QaResult]:
-    """qa_stage.mcaid_claim_line.R:9-14 — ids in elig, distinct
-    claim-line count vs raw, rev_code 4-digit-numeric format."""
-    work = _with_elig_marker(line, elig, id_col)
+    """The claim_line gate: ``claim_line_id`` unique, then
+    qa_stage.mcaid_claim_line.R:9-14 — ids in elig, rev_code
+    4-digit-numeric format, distinct claim-line count vs raw."""
     rc = F.col("rev_code")
-    row = work.agg(
-        F.sum(F.when(F.col("_in_elig").isNull(), 1).otherwise(0))
-        .alias("_no_elig"),
-        F.countDistinct("claim_line_id").alias("_n_lines"),
-        F.sum(
-            F.when(
-                rc.isNotNull()
-                & ((F.length(rc) != 4) | ~_digits_only(rc)),
-                1,
-            ).otherwise(0)
-        ).alias("_bad_rev"),
-    ).first()
-    out = [
-        ("ids-in-elig", (row["_no_elig"] or 0) == 0,
-         f"violations={row['_no_elig'] or 0}"),
-        ("rev_code-format", (row["_bad_rev"] or 0) == 0,
-         f"violations={row['_bad_rev'] or 0}"),
-    ]
+    checks = {
+        "ids-in-elig": InParent(elig, id_col),
+        "rev_code-format": rc.isNotNull()
+        & ((F.length(rc) != 4) | ~_digits_only(rc)),
+    }
     if raw_distinct_lines is not None:
-        out.append((
-            "distinct-lines-vs-raw",
-            row["_n_lines"] == raw_distinct_lines,
-            f"table={row['_n_lines']} raw={raw_distinct_lines}",
-        ))
-    return out
+        checks["distinct-lines-vs-raw"] = Stat(
+            aggs=(F.countDistinct("claim_line_id").alias("_n_lines"),),
+            verdict=lambda r: (
+                r["_n_lines"] == raw_distinct_lines,
+                f"table={r['_n_lines']} raw={raw_distinct_lines}",
+            ),
+        )
+    return fused_table_qa(line, unique_keys=["claim_line_id"], checks=checks)
 
 
 def qa_mcaid_claim_pharm(
@@ -563,25 +545,12 @@ def qa_mcaid_claim_pharm(
 ) -> list[QaResult]:
     """qa_stage.mcaid_claim_pharm.R:9-12 — ids in elig; NDC 11-digit
     numeric (:116-121)."""
-    work = _with_elig_marker(pharm, elig, id_col)
     ndc = F.col("ndc")
-    row = work.agg(
-        F.sum(F.when(F.col("_in_elig").isNull(), 1).otherwise(0))
-        .alias("_no_elig"),
-        F.sum(
-            F.when(
-                ndc.isNotNull()
-                & ((F.length(ndc) != 11) | ~_digits_only(ndc)),
-                1,
-            ).otherwise(0)
-        ).alias("_bad_ndc"),
-    ).first()
-    return [
-        ("ids-in-elig", (row["_no_elig"] or 0) == 0,
-         f"violations={row['_no_elig'] or 0}"),
-        ("ndc-format", (row["_bad_ndc"] or 0) == 0,
-         f"violations={row['_bad_ndc'] or 0}"),
-    ]
+    return fused_table_qa(pharm, checks={
+        "ids-in-elig": InParent(elig, id_col),
+        "ndc-format": ndc.isNotNull()
+        & ((F.length(ndc) != 11) | ~_digits_only(ndc)),
+    })
 
 
 def procedure_code_system(code: F.Column) -> F.Column:
@@ -620,23 +589,20 @@ def qa_mcaid_claim_procedure(
     """qa_stage.mcaid_claim_procedure.R:10-14 — ids in elig; distinct
     UNKNOWN-code-system procedure codes below the reference's
     tolerance (< 50, :152)."""
-    work = _with_elig_marker(proc, elig, id_col).withColumn(
-        "_sys", procedure_code_system(F.col("procedure_code"))
-    )
-    row = work.agg(
-        F.sum(F.when(F.col("_in_elig").isNull(), 1).otherwise(0))
-        .alias("_no_elig"),
-        F.countDistinct(
-            F.when(F.col("_sys") == "UNKNOWN", F.col("procedure_code"))
-        ).alias("_unknown"),
-    ).first()
-    return [
-        ("ids-in-elig", (row["_no_elig"] or 0) == 0,
-         f"violations={row['_no_elig'] or 0}"),
-        ("procedure-code-format",
-         (row["_unknown"] or 0) < unknown_limit,
-         f"unknown-codes={row['_unknown'] or 0} (limit {unknown_limit})"),
-    ]
+    code = F.col("procedure_code")
+    unknown = F.countDistinct(
+        F.when(procedure_code_system(code) == "UNKNOWN", code)
+    ).alias("_unknown")
+    return fused_table_qa(proc, checks={
+        "ids-in-elig": InParent(elig, id_col),
+        "procedure-code-format": Stat(
+            aggs=(unknown,),
+            verdict=lambda r: (
+                (r["_unknown"] or 0) < unknown_limit,
+                f"unknown-codes={r['_unknown'] or 0} (limit {unknown_limit})",
+            ),
+        ),
+    })
 
 
 def qa_mcaid_claim_icdcm_header(
@@ -656,63 +622,41 @@ def qa_mcaid_claim_icdcm_header(
         "icdcm_version",
         F.lit(1).alias("_in_ref"),
     ).distinct()
-    work = (
-        _with_elig_marker(icdcm, elig, id_col)
-        .join(F.broadcast(ref), ["icdcm_norm", "icdcm_version"], "left")
-    )
+    work = icdcm.join(F.broadcast(ref), ["icdcm_norm", "icdcm_version"], "left")
     ln = F.length("icdcm_norm")
-    v9 = F.col("icdcm_version") == 9
-    v10 = F.col("icdcm_version") == 10
-    num_ok = F.col("icdcm_number").isin(
-        *[f"{i:02d}" for i in range(1, 13)], "admit"
-    )
-    row = work.agg(
-        F.sum(F.when(F.col("_in_elig").isNull(), 1).otherwise(0))
-        .alias("_no_elig"),
-        F.min(F.when(v9, ln)).alias("_v9_lo"),
-        F.max(F.when(v9, ln)).alias("_v9_hi"),
-        F.min(F.when(v10, ln)).alias("_v10_lo"),
-        F.max(F.when(v10, ln)).alias("_v10_hi"),
-        F.sum(F.when(~num_ok, 1).otherwise(0)).alias("_bad_num"),
-        F.countDistinct(
-            F.when(
-                F.col("_in_ref").isNull(),
-                F.concat_ws("-", "icdcm_version", "icdcm_norm"),
-            )
-        ).alias("_no_ref"),
-    ).first()
-    v9_ok = row["_v9_lo"] is None or (
-        row["_v9_lo"] == 5 and row["_v9_hi"] == 5
-    )
-    v10_ok = row["_v10_lo"] is None or (
-        row["_v10_lo"] >= 3 and row["_v10_hi"] <= 7
-    )
-    return [
-        ("ids-in-elig", (row["_no_elig"] or 0) == 0,
-         f"violations={row['_no_elig'] or 0}"),
-        ("icd9-length-5", v9_ok,
-         f"len-range=[{row['_v9_lo']}..{row['_v9_hi']}]"),
-        ("icd10-length-3-7", v10_ok,
-         f"len-range=[{row['_v10_lo']}..{row['_v10_hi']}]"),
-        ("icdcm_number-range", (row["_bad_num"] or 0) == 0,
-         f"violations={row['_bad_num'] or 0}"),
-        ("dx-in-ref", (row["_no_ref"] or 0) < unmatched_dx_limit,
-         f"unmatched={row['_no_ref'] or 0} (limit {unmatched_dx_limit})"),
-    ]
 
+    def length_range(version: int, lo: int, hi: int) -> Stat:
+        in_v = F.col("icdcm_version") == version
+        a, b = f"_v{version}_lo", f"_v{version}_hi"
+        return Stat(
+            aggs=(F.min(F.when(in_v, ln)).alias(a), F.max(F.when(in_v, ln)).alias(b)),
+            verdict=lambda r: (
+                r[a] is None or (r[a] >= lo and r[b] <= hi),
+                f"len-range=[{r[a]}..{r[b]}]",
+            ),
+        )
 
-def qa_ids_in_elig(
-    df: DataFrame, elig: DataFrame, id_col: str = "id_mcaid"
-) -> list[QaResult]:
-    """The single-check suites (qa_stage.mcaid_claim_naloxone.R:9-10,
-    qa_stage.mcaid_claim_preg_episode.R:9-10): every id appears in the
-    elig tables."""
-    row = _with_elig_marker(df, elig, id_col).agg(
-        F.sum(F.when(F.col("_in_elig").isNull(), 1).otherwise(0))
-        .alias("_no_elig")
-    ).first()
-    return [("ids-in-elig", (row["_no_elig"] or 0) == 0,
-             f"violations={row['_no_elig'] or 0}")]
+    no_ref = F.countDistinct(
+        F.when(
+            F.col("_in_ref").isNull(),
+            F.concat_ws("-", "icdcm_version", "icdcm_norm"),
+        )
+    ).alias("_no_ref")
+    return fused_table_qa(work, checks={
+        "ids-in-elig": InParent(elig, id_col),
+        "icd9-length-5": length_range(9, 5, 5),
+        "icd10-length-3-7": length_range(10, 3, 7),
+        "icdcm_number-range": ~F.col("icdcm_number").isin(
+            *[f"{i:02d}" for i in range(1, 13)], "admit"
+        ),
+        "dx-in-ref": Stat(
+            aggs=(no_ref,),
+            verdict=lambda r: (
+                (r["_no_ref"] or 0) < unmatched_dx_limit,
+                f"unmatched={r['_no_ref'] or 0} (limit {unmatched_dx_limit})",
+            ),
+        ),
+    })
 
 
 def qa_rows_per_year(
@@ -761,20 +705,19 @@ def qa_mcaid_claim_moud(
     MOUD rows whose admin_method stayed NULL mean the NDC/procedure
     classification maps have a gap a human must extend (the
     reference's review query at :114-115)."""
-    work = _with_elig_marker(df, elig, id_col)
-    row = work.agg(
-        F.sum(F.when(F.col("_in_elig").isNull(), 1).otherwise(0))
-        .alias("_no_elig"),
-        F.sum(
-            F.when(F.col("admin_method").isNull(), 1).otherwise(0)
-        ).alias("_new_ndc"),
-    ).first()
-    return [
-        ("ids-in-elig", (row["_no_elig"] or 0) == 0,
-         f"violations={row['_no_elig'] or 0}"),
-        ("no-unclassified-moud-codes", (row["_new_ndc"] or 0) == 0,
-         f"unclassified={row['_new_ndc'] or 0}"),
-    ]
+    new_ndc = F.sum(
+        F.when(F.col("admin_method").isNull(), 1).otherwise(0)
+    ).alias("_new_ndc")
+    return fused_table_qa(df, checks={
+        "ids-in-elig": InParent(elig, id_col),
+        "no-unclassified-moud-codes": Stat(
+            aggs=(new_ndc,),
+            verdict=lambda r: (
+                (r["_new_ndc"] or 0) == 0,
+                f"unclassified={r['_new_ndc'] or 0}",
+            ),
+        ),
+    })
 
 
 def qa_housing_status(
@@ -788,8 +731,6 @@ def qa_housing_status(
     distinct-person count (a sudden jump means a bad PHA refresh).
     One aggregate for the dup check; the trend check is one
     month-grain groupBy + lag over the (tiny) month series."""
-    from pyspark.sql import Window
-
     row = df.agg(
         (
             F.count(F.lit(1))
@@ -829,25 +770,23 @@ def qa_mcare_elig_timevar(
     """Medicare timevar suite (``qa_stage.mcare_elig_timevar.R``)
     composed from the generic gates: segment-key distinctness +
     interval validity + per-person overlap (the dup-row check,
-    :137-170, in one fused action) and distinct-id parity with the WA
-    MBSF extract (:95-135). The row-count-vs-previous-run item
+    :137-170) and distinct-id parity with the WA MBSF extract
+    (:95-135): one aggregate over the table, one over the extract.
+    The row-count-vs-previous-run item
     (:29-90) compares against the metadata history of PRIOR loads —
     that is ``qa_rows_per_year``'s contract, not a single-build gate,
     so it is intentionally not composed here."""
-    out = fused_table_qa(
+    raw_id = raw_id_col or (
+        "bene_id" if "bene_id" in bene_enrollment.columns else id_col
+    )
+    return fused_table_qa(
         timevar,
         unique_keys=[id_col, "from_date", "to_date"],
         interval_cols=("from_date", "to_date"),
         overlap_ids=[id_col],
+        checks={"distinct-ids-match-mbsf": _distinct_ids_match(id_col, raw_id)},
+        raw=bene_enrollment,
     )
-    raw_id = raw_id_col or (
-        "bene_id" if "bene_id" in bene_enrollment.columns else id_col
-    )
-    out.append(check_member_count_match(
-        timevar, bene_enrollment, id_col, raw_id,
-        name="distinct-ids-match-mbsf",
-    ))
-    return out
 
 
 def qa_apcd_claim_provider(
@@ -860,23 +799,15 @@ def qa_apcd_claim_provider(
     against ``apcd_medical_claim``, generalized to the full table):
     row parity with the raw extract (a pure projection must neither
     drop nor mint rows), the provider id never null, and member ids
-    referenced in elig — the spot-checkable predicates in one fused
-    pass + one count."""
-    out = fused_table_qa(
-        provider,
-        extra_flags={
-            "provider_id-not-null": F.col("provider_id_apcd").isNull(),
-        },
-    )
-    n_built = provider.count()
-    n_raw = provider_raw.count()
-    out.append((
-        "row-parity-with-raw", n_built == n_raw,
-        f"built={n_built} raw={n_raw}",
-    ))
+    referenced in elig — one aggregate over the table, one count of
+    the extract."""
+    checks = {
+        "provider_id-not-null": F.col("provider_id_apcd").isNull(),
+        "row-parity-with-raw": row_count_vs_raw("built"),
+    }
     if elig_demo is not None:
-        out += qa_ids_in_elig(provider, elig_demo, id_col="id_apcd")
-    return out
+        checks["ids-in-elig"] = InParent(elig_demo, "id_apcd")
+    return fused_table_qa(provider, checks=checks, raw=provider_raw)
 
 
 def qa_mcaid_mcare_claim_ccw(
@@ -895,29 +826,14 @@ def qa_mcaid_mcare_claim_ccw(
     The remainder of the script (person-year tabulations against CMS
     published counts, prevalence-by-age review) is the analyst
     comparison step — ``ccw_table_qa`` surfaces the prevalence
-    numbers it eyeballs."""
-    out = ccw_table_qa(
+    numbers it eyeballs. One action over the ccw table, one over the
+    header."""
+    return ccw_table_qa(
         ccw, expected_conditions, id_col=id_col, cond_col="ccw_desc"
-    )
-    nulls = (
-        header.agg(F.sum(
-            F.when(F.col(id_col).isNull(), 1).otherwise(0)
-        ).alias("_n")).first()["_n"] or 0
-    )
-    out.append((
-        "header-id_apde-not-null", nulls == 0, f"violations={nulls}"
-    ))
-    missing = (
-        header.filter(F.col("source_desc") == "mcare")
-        .select(id_col).distinct()
-        .join(
-            xwalk.filter(F.col("id_mcare").isNotNull()).select(id_col),
-            id_col, "left_anti",
-        )
-        .count()
-    )
-    out.append((
-        "mcare-header-ids-in-xwalk", missing == 0,
-        f"violations={missing}",
-    ))
-    return out
+    ) + fused_table_qa(header, checks={
+        "header-id_apde-not-null": F.col(id_col).isNull(),
+        "mcare-header-ids-in-xwalk": InParent(
+            xwalk.filter(F.col("id_mcare").isNotNull()), id_col,
+            where=F.col("source_desc") == "mcare",
+        ),
+    })

@@ -588,8 +588,9 @@ def qa_apcd_claim_header(
 ) -> list:
     """The reference's table-level QA invariant suite
     (``load_stage.apcd_claim_header.R:1112-1251`` — SURVEY §5 calls
-    these the primary operator-correctness oracles), re-expressed so
-    the row-local + event-id invariants run in ONE fused pass:
+    these the primary operator-correctness oracles), re-expressed as
+    ONE fused aggregate over the table plus one count of the live raw
+    headers:
 
     - claim_header_id distinct (res1/res2)
     - stage rowcount == raw non-denied/orphaned rowcount (res3)
@@ -604,7 +605,12 @@ def qa_apcd_claim_header(
     """
     from pyspark.sql import Window
 
-    from claims_data_spark.qa import check_referential, fused_table_qa
+    from claims_data_spark.qa import (
+        InParent,
+        fused_table_qa,
+        one_person,
+        row_count_vs_raw,
+    )
 
     w = Window.partitionBy("id_apcd", "ed_pophealth_id").orderBy(
         "first_service_date"
@@ -616,56 +622,37 @@ def qa_apcd_claim_header(
             F.lag("first_service_date").over(w),
         ),
     )
-    results = fused_table_qa(
+    checks = {
+        "claim-type-matched": F.col("claim_type_id").isNull()
+        | F.col("claim_type_apcd_id").isNull(),
+        "ipt-has-discharge": F.col("inpatient_id").isNotNull()
+        & F.col("discharge_date").isNull(),
+        "ed-perform-implies-pophealth": F.col("ed_perform_id").isNotNull()
+        & F.col("ed_pophealth_id").isNull(),
+        "ed-pophealth-1day-window": F.col("_lag_fsd").isNotNull()
+        & (F.abs(F.datediff("first_service_date", "_lag_fsd")) > 1),
+        # one-person for the other three id families (res8a-c)
+        **{
+            f"one-person({ev})": one_person(ev, "id_apcd")
+            for ev in ("pc_visit_id", "inpatient_id", "ed_perform_id")
+        },
+        "stage-matches-raw-count": row_count_vs_raw("stage"),
+    }
+    if elig_demo is not None:
+        checks["members-in-elig-demo"] = InParent(elig_demo, "id_apcd")
+    if elig_timevar is not None:
+        checks["members-in-elig-timevar"] = InParent(elig_timevar, "id_apcd")
+    return fused_table_qa(
         work,
         unique_keys=["claim_header_id"],
-        event_id="ed_pophealth_id",
+        event_ids=["ed_pophealth_id"],
         person_id="id_apcd",
-        extra_flags={
-            "claim-type-matched": F.col("claim_type_id").isNull()
-            | F.col("claim_type_apcd_id").isNull(),
-            "ipt-has-discharge": F.col("inpatient_id").isNotNull()
-            & F.col("discharge_date").isNull(),
-            "ed-perform-implies-pophealth": F.col("ed_perform_id").isNotNull()
-            & F.col("ed_pophealth_id").isNull(),
-            "ed-pophealth-1day-window": F.col("_lag_fsd").isNotNull()
-            & (
-                F.abs(F.datediff("first_service_date", "_lag_fsd")) > 1
-            ),
-        },
+        checks=checks,
+        raw=raw_header.filter(
+            (F.col("denied_header_flag") == "N")
+            & (F.col("orphaned_header_flag") == "N")
+        ),
     )
-    # event-id one-person invariants for the other three id families
-    for ev in ("pc_visit_id", "inpatient_id", "ed_perform_id"):
-        results += [
-            r for r in fused_table_qa(
-                stage, event_id=ev, person_id="id_apcd"
-            ) if r[0].startswith("one-person")
-        ]
-
-    n_stage = stage.count()
-    n_raw = raw_header.filter(
-        (F.col("denied_header_flag") == "N")
-        & (F.col("orphaned_header_flag") == "N")
-    ).count()
-    results.append(
-        ("stage-matches-raw-count", n_stage == n_raw,
-         f"stage={n_stage} raw={n_raw}")
-    )
-    if elig_demo is not None:
-        results.append(
-            check_referential(
-                stage.select("id_apcd"), elig_demo.select("id_apcd"),
-                ["id_apcd"], name="members-in-elig-demo",
-            )
-        )
-    if elig_timevar is not None:
-        results.append(
-            check_referential(
-                stage.select("id_apcd"), elig_timevar.select("id_apcd"),
-                ["id_apcd"], name="members-in-elig-timevar",
-            )
-        )
-    return results
 
 
 # ---------------------------------------------------------------------------
@@ -763,32 +750,18 @@ def qa_apcd_child(
     elig_timevar: DataFrame | None = None,
     not_null_col: str | None = None,
 ) -> list:
-    """The children's shared QA: members referenced in elig tables;
-    key payload column never null (one fused pass for the row-local
-    part)."""
-    from claims_data_spark.qa import check_referential, fused_table_qa
+    """The children's shared QA: key payload column never null;
+    members referenced in elig tables — one fused aggregate."""
+    from claims_data_spark.qa import InParent, fused_table_qa
 
-    results = []
+    checks = {}
     if not_null_col is not None:
-        results += fused_table_qa(
-            child,
-            extra_flags={f"{not_null_col}-not-null": F.col(not_null_col).isNull()},
-        )
+        checks[f"{not_null_col}-not-null"] = F.col(not_null_col).isNull()
     if elig_demo is not None:
-        results.append(
-            check_referential(
-                child.select("id_apcd"), elig_demo.select("id_apcd"),
-                ["id_apcd"], name="members-in-elig-demo",
-            )
-        )
+        checks["members-in-elig-demo"] = InParent(elig_demo, "id_apcd")
     if elig_timevar is not None:
-        results.append(
-            check_referential(
-                child.select("id_apcd"), elig_timevar.select("id_apcd"),
-                ["id_apcd"], name="members-in-elig-timevar",
-            )
-        )
-    return results
+        checks["members-in-elig-timevar"] = InParent(elig_timevar, "id_apcd")
+    return fused_table_qa(child, checks=checks)
 
 
 # ---------------------------------------------------------------------------

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from claims_data_spark.operators.dense_id import dense_event_ids_inline
+from claims_data_spark.qa import QaResult, Stat, fused_table_qa
 
 # ED definitions (load_stage.mcare_claim_header.R:379-399): the RDA
 # 'perform' sets are narrower than the Yale 'pophealth' sets
@@ -533,20 +534,30 @@ def build_mcaid_mcare_claim_procedure(
 
 def combined_child_union_qa(
     combined: DataFrame, mcaid_side: DataFrame, mcare_side: DataFrame
-) -> tuple[bool, dict[str, int]]:
+) -> QaResult:
     """Reference table-level QA for every combined child
     (``load_stage.mcaid_mcare_claim_icdcm_header.R:66-94`` and the
     procedure twin): combined row count must equal mcaid + mcare —
     the union may not invent or drop rows (per-source tables are
     already distinct at their grain, and ``source_desc`` prevents
-    cross-source collisions). Three count jobs, no data movement.
+    cross-source collisions). One count over the combined table, one
+    over the two sides, no data movement.
     """
-    counts = {
-        "combined": combined.count(),
-        "mcaid": mcaid_side.count(),
-        "mcare": mcare_side.count(),
-    }
-    return counts["combined"] == counts["mcaid"] + counts["mcare"], counts
+    sides = mcaid_side.select(F.lit("mcaid").alias("_side")).unionByName(
+        mcare_side.select(F.lit("mcare").alias("_side"))
+    )
+    per_side = [
+        F.count(F.when(F.col("_side") == s, 1)).alias(f"_{s}")
+        for s in ("mcaid", "mcare")
+    ]
+    return fused_table_qa(combined, checks={"union-row-count": Stat(
+        aggs=(F.count(F.lit(1)).alias("_rows"),),
+        raw_aggs=tuple(per_side),
+        verdict=lambda r: (
+            r["_rows"] == r["_mcaid"] + r["_mcare"],
+            f"combined={r['_rows']} mcaid={r['_mcaid']} mcare={r['_mcare']}",
+        ),
+    )}, raw=sides)[0]
 
 
 # ---------------------------------------------------------------------------

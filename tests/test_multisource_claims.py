@@ -99,7 +99,7 @@ def test_combined_inpatient_remint_across_sources(combined):
 
 def test_combined_event_ids_single_person_across_sources(combined):
     for ev in ("ed_pophealth_id", "inpatient_id", "ed_perform_id", "pc_visit_id"):
-        checks = fused_table_qa(combined, event_id=ev, person_id="id_apde")
+        checks = fused_table_qa(combined, event_ids=[ev], person_id="id_apde")
         one_person = [c for c in checks if c[0].startswith("one-person")][0]
         assert one_person[1], (ev, one_person)
     # combined keys stay unique per (source, claim)
@@ -414,8 +414,9 @@ def test_combined_claim_children_union(spark):
     assert rows[("mcaid", "5001")]["filetype_mcare"] is None
     assert rows[("mcare", "CLMX")]["id_apde"] == "A3"
     assert rows[("mcare", "CLMX")]["filetype_mcare"] == "inpatient"
-    ok, counts = combined_child_union_qa(out, mcaid_icdcm, mcare_icdcm)
-    assert ok and counts == {"combined": 3, "mcaid": 2, "mcare": 1}
+    assert combined_child_union_qa(out, mcaid_icdcm, mcare_icdcm) == (
+        "union-row-count", True, "combined=3 mcaid=2 mcare=1"
+    )
 
     mcaid_px = spark.createDataFrame(
         [(101, 5001, "2024-01-03", "99213", "01", "25")],

@@ -1,6 +1,10 @@
 """Master pipeline orchestrator: full DAG on the fixtures with QA
 gates, and the strict-QA failure mode."""
 
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -8,12 +12,9 @@ from claims_data_spark.pipeline import run_mcaid_pipeline
 from tests import fixtures as fx
 
 
-def test_full_pipeline_with_qa(spark):
+def _mcaid_refs(spark):
     clean, geocode = fx.ref_address(spark)
-    result = run_mcaid_pipeline(
-        spark,
-        fx.raw_mcaid_elig(spark),
-        fx.raw_mcaid_claim(spark),
+    return dict(
         ref_rac=fx.ref_rac_code(spark),
         ref_address=clean,
         ref_geocode=geocode,
@@ -23,6 +24,15 @@ def test_full_pipeline_with_qa(spark):
         ref_icdcm=fx.ref_icdcm_codes(spark),
         ref_rda=fx.ref_rda_value_sets(spark),
         ccw_config=[r.asDict() for r in fx.ref_ccw_lookup(spark).collect()],
+    )
+
+
+def test_full_pipeline_with_qa(spark):
+    result = run_mcaid_pipeline(
+        spark,
+        fx.raw_mcaid_elig(spark),
+        fx.raw_mcaid_claim(spark),
+        **_mcaid_refs(spark),
     )
     assert set(result.tables) == {
         "elig_demo", "elig_timevar", "elig_month", "claim_line",
@@ -57,6 +67,64 @@ def test_pipeline_strict_qa_raises(spark):
         strict_qa=False,
     )
     assert any(t == "claim_line" for t, _ in result.failures())
+
+
+def test_run_mcaid_pipeline_one_action_per_gate(spark, monkeypatch):
+    """Each of the seven table gates is one aggregate over its table;
+    elig_timevar adds one over the raw extract — 8 QA actions. Actions
+    the ``build_*`` functions issue themselves are not QA and not counted."""
+    import traceback
+
+    from claims_data_spark import qa
+
+    raw_elig, raw_claim = fx.raw_mcaid_elig(spark), fx.raw_mcaid_claim(spark)
+    refs = _mcaid_refs(spark)
+    actions = []
+    cls = type(raw_elig)
+    for name in ("collect", "count"):
+        def counted(self, *a, _orig=getattr(cls, name), _name=name, **k):
+            if any(f.filename == qa.__file__ for f in traceback.extract_stack()):
+                actions.append(_name)
+            return _orig(self, *a, **k)
+        monkeypatch.setattr(cls, name, counted)
+    result = run_mcaid_pipeline(spark, raw_elig, raw_claim, **refs)
+    monkeypatch.undo()
+    assert len(result.qa) == 22 and result.failures() == []
+    assert len(actions) == 8, actions
+
+
+def test_pipeline_records_claim_members_missing_from_elig(spark):
+    # p3 has claims but no elig rows: both membership checks must FAIL
+    raw_elig = fx.raw_mcaid_elig(spark).filter(F.col("MBR_H_SID") != "p3")
+    result = run_mcaid_pipeline(
+        spark, raw_elig, fx.raw_mcaid_claim(spark),
+        ref_xwalk=fx.ref_claim_type_xwalk(spark),
+        strict_qa=False,
+    )
+    failed = {(t, r[0]) for t, r in result.failures()}
+    assert ("claim_line", "ids-in-elig") in failed
+    assert ("claim_header", "claim-members-in-elig") in failed
+
+
+def test_strict_gate_raises_under_python_O():
+    """The strict gate raises explicitly, so ``python -O`` (which strips
+    ``assert``) cannot turn a FAIL into a silent pass."""
+    code = (
+        "from claims_data_spark.qa import gate\n"
+        "try:\n"
+        "    gate([], 't', ('c', False, 'd'), strict=True)\n"
+        "except AssertionError as e:\n"
+        "    print(e)\n"
+        "else:\n"
+        "    raise SystemExit('no raise')\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-O", "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert "QA FAIL t: c (d)" in out.stdout
 
 
 def test_run_mcaid_mcare_pipeline_end_to_end(spark):
@@ -139,6 +207,11 @@ def test_run_mcaid_mcare_pipeline_end_to_end(spark):
               "mcaid_mcare_claim_ccw"):
         assert t in result.tables, t
     assert result.failures() == []
+    log = result.qa_log(spark)
+    assert log.count() == len(result.qa)
+    assert {r["qa_item"] for r in log.filter(
+        F.col("table") == "mcaid_mcare_claim_icdcm_header").collect()
+    } == {"union-row-count"}
     combined_icdcm = result.tables["mcaid_mcare_claim_icdcm_header"]
     assert combined_icdcm.filter(F.col("id_apde").isNull()).count() == 0
     srcs = {r["source_desc"] for r in

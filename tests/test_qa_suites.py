@@ -4,10 +4,13 @@ reference scripts' pass/fail branches."""
 
 from __future__ import annotations
 
+import pytest
+
 from claims_data_spark.qa import (
+    InParent,
+    fused_table_qa,
     procedure_code_system,
     promotion_qa,
-    qa_ids_in_elig,
     qa_mcaid_claim_icdcm_header,
     qa_mcaid_claim_line,
     qa_mcaid_claim_pharm,
@@ -127,10 +130,18 @@ def test_qa_claim_icdcm_header_all_checks(spark):
 
 
 def test_qa_ids_in_elig_single_check(spark):
+    """The single-check suites (qa_stage.mcaid_claim_naloxone.R:9-10,
+    qa_stage.mcaid_claim_preg_episode.R:9-10): every id appears in the
+    elig tables."""
+    def ids_in_elig(df):
+        return fused_table_qa(
+            df, checks={"ids-in-elig": InParent(_elig(spark), "id_mcaid")}
+        )[0]
+
     ok = spark.createDataFrame([("p1", 1)], "id_mcaid string, x int")
-    assert qa_ids_in_elig(ok, _elig(spark))[0][1]
+    assert ids_in_elig(ok)[1]
     bad = spark.createDataFrame([("nope", 1)], "id_mcaid string, x int")
-    name, passed, detail = qa_ids_in_elig(bad, _elig(spark))[0]
+    name, passed, detail = ids_in_elig(bad)
     assert not passed and "violations=1" in detail
 
 
@@ -289,3 +300,20 @@ def test_qa_mcaid_mcare_claim_ccw_pass_and_fail(spark):
     assert not got["distinct-conditions-match"][0]
     assert not got["header-id_apde-not-null"][0]
     assert not got["mcare-header-ids-in-xwalk"][0]
+
+
+@pytest.mark.parametrize("raw_rows, empty", [
+    ([], "empty: built, raw"),
+    ([("p1", 201701)], "empty: built"),
+])
+def test_timevar_date_range_names_empty_side(spark, raw_rows, empty):
+    from claims_data_spark.qa import timevar_golden_qa
+
+    timevar = spark.createDataFrame(
+        [], "id_mcaid string, from_date date, to_date date"
+    )
+    raw = spark.createDataFrame(
+        raw_rows, "MBR_H_SID string, CLNDR_YEAR_MNTH int"
+    )
+    got = _by_name(timevar_golden_qa(timevar, raw))
+    assert got["date-range"] == (False, empty)

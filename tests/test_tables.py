@@ -7,14 +7,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from claims_data_spark.qa import (
-    check_event_id_single_person,
-    check_event_ids_dense,
-    check_intervals_valid,
-    check_keys_unique,
-    check_no_overlap_within_person,
-    check_referential,
-)
+from claims_data_spark.qa import InParent, fused_table_qa
 from claims_data_spark.tables.claim_children import (
     build_claim_icdcm_header,
     build_claim_line,
@@ -137,10 +130,11 @@ def test_timevar_dual_rule_and_rac_drop(spark, raw_elig):
 
 def test_timevar_qa_invariants(spark, raw_elig):
     tv = build_elig_timevar(raw_elig)
-    for name, ok, detail in [
-        check_intervals_valid(tv),
-        check_no_overlap_within_person(tv, ["id_mcaid"]),
-    ]:
+    checks = fused_table_qa(
+        tv, interval_cols=("from_date", "to_date"), overlap_ids=["id_mcaid"]
+    )
+    assert [c[0] for c in checks] == ["intervals-valid", "no-overlap"]
+    for name, ok, detail in checks:
         assert ok, f"{name}: {detail}"
 
 
@@ -160,7 +154,7 @@ def test_elig_month_explode(spark, raw_elig):
 
 def test_claim_line_grain(spark, raw_claim):
     line = build_claim_line(raw_claim)
-    name, ok, detail = check_keys_unique(line, ["claim_line_id"])
+    [(name, ok, detail)] = fused_table_qa(line, unique_keys=["claim_line_id"])
     assert ok, detail
     assert line.filter(F.col("claim_header_id") == 13).count() == 2
 
@@ -193,7 +187,9 @@ def test_pharm_classifier(spark, raw_claim):
 # --- claim_header -------------------------------------------------------------
 
 def test_header_grain_and_types(spark, header, raw_claim):
-    name, ok, detail = check_keys_unique(header, ["claim_header_id"])
+    [(name, ok, detail)] = fused_table_qa(
+        header, unique_keys=["claim_header_id"]
+    )
     assert ok, detail
     types = {r["claim_header_id"]: r["claim_type_id"] for r in header.collect()}
     assert types[1] == 4 and types[4] == 1 and types[6] == 5
@@ -207,10 +203,13 @@ def test_header_ed_flags_and_episodes(spark, header):
     assert ed[3]["ed_pophealth_id"] != ed[1]["ed_pophealth_id"]
     # ed_perform: one id per (person, date) -> 3 distinct
     assert len({r["ed_perform_id"] for r in ed.values()}) == 3
-    for check in [
-        check_event_id_single_person(header, "ed_pophealth_id", "id_mcaid"),
-        check_event_ids_dense(header, "ed_pophealth_id"),
-    ]:
+    checks = fused_table_qa(
+        header, event_ids=["ed_pophealth_id"], person_id="id_mcaid"
+    )
+    assert [c[0] for c in checks] == [
+        "one-person(ed_pophealth_id)", "dense(ed_pophealth_id)"
+    ]
+    for check in checks:
         assert check[1], f"{check[0]}: {check[2]}"
 
 
@@ -281,8 +280,8 @@ def test_inpatient_rows_have_discharge(spark, header):
 def test_header_referential_qa(spark, header, raw_elig):
     tv = build_elig_timevar(raw_elig)
     # claim members must exist in elig (p1,p2,p3 all present)
-    check = check_referential(
-        header.select(F.col("id_mcaid")), tv.select("id_mcaid"), ["id_mcaid"]
+    [check] = fused_table_qa(
+        header, checks={"members-in-elig": InParent(tv, "id_mcaid")}
     )
     assert check[1], check[2]
 
