@@ -43,6 +43,7 @@ from functools import partial
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from claims_data_spark.pipeline import cache_stage
 from claims_data_spark.qa import QaResult, gate as qa_gate
 
 
@@ -109,21 +110,16 @@ def run_corpus_pipeline(
 
     qa: list[tuple[str, QaResult]] = []
     rejected: dict[str, int] = {}
-    _persisted: list[DataFrame] = []
-
     gate = partial(qa_gate, qa, strict=strict_qa)
-
-    def checkpointed(df: DataFrame) -> DataFrame:
-        # every stage boundary is read multiple times (its own QA
-        # actions plus every downstream stage) — without a persist the
-        # gate actions recompute the full upstream lineage each time,
-        # turning a 5-stage pipeline quadratic in stages (measured at
-        # sf1: 138 s -> 54 s from these persists alone). LRU-evictable;
-        # intermediate frames unpersist before returning, the final
-        # frame stays cached for the caller's first actions.
-        df = df.persist()
-        _persisted.append(df)
-        return df
+    # every stage boundary is read multiple times (its own QA actions
+    # plus every downstream stage) — without a cache the gate actions
+    # recompute the full upstream lineage each time, turning a 5-stage
+    # pipeline quadratic in stages (measured at sf1: 138 s -> 54 s from
+    # these caches alone). Intermediate frames unpersist before
+    # returning; the final frame stays cached for the caller's first
+    # actions.
+    held: list[DataFrame] = []
+    stage = partial(cache_stage, held=held)
 
     n_in = docs.count()
 
@@ -147,7 +143,7 @@ def run_corpus_pipeline(
         ),
         ("kept-nonempty", n_kept > 0, f"kept={n_kept}"),
     )
-    cur = checkpointed(kept)
+    cur = stage(kept)
 
     # ---- stage 2: decontaminate ---------------------------------------
     if benchmark is not None:
@@ -204,12 +200,12 @@ def run_corpus_pipeline(
                 f"violations={exact_survivors}",
             ),
         )
-        cur = checkpointed(clean_fuzzy)
+        cur = stage(clean_fuzzy)
 
     # ---- stage 3: rebalance ---------------------------------------------
     if target_mix:
         before = cur.count()
-        cur = checkpointed(mix_rebalance(
+        cur = stage(mix_rebalance(
             cur, strata_col, target_mix, id_col=id_col,
             seed=f"{seed}-mix", weight_col=weight_col,
         ))
@@ -237,7 +233,7 @@ def run_corpus_pipeline(
 
     # ---- stage 4: split ---------------------------------------------------
     if split_weights:
-        cur = checkpointed(assign_splits(
+        cur = stage(assign_splits(
             cur, split_weights, id_col=id_col,
             group_col=split_group_col, seed=f"{seed}-split",
         ))
@@ -299,7 +295,7 @@ def run_corpus_pipeline(
             ),
         )
 
-    for df in _persisted:
+    for df in held:
         if df is not cur:
             df.unpersist()
     return {

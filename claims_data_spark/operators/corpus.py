@@ -294,7 +294,7 @@ def fuzzy_decontaminate(
     (same contract as ``minhash_near_dup_pairs``' default): the cache
     is LRU-evictable; long-lived sessions calling this repeatedly
     should materialize the returned frames and unpersist, as
-    ``run_corpus_pipeline`` does with its stage checkpoints.
+    ``run_corpus_pipeline`` does with its cached stages.
     """
     from claims_data_spark.operators.dedup import (
         minhash_signature,

@@ -6,17 +6,27 @@ stages).
 The reference's DAG (``:157-371``): elig_demo → elig_timevar →
 elig_month; the four claim child tables depend only on the raw claims
 extract; claim_header depends on all children; conditions depend on
-header + icdcm. Here each stage is a lazy DataFrame; "promotion" is
-the caller's choice of writer (``sources.io.write_table`` /
-``write_bucketed``); QA gates run as assertions and are returned as a
-log table like ``metadata.qa_mcaid``.
+header + icdcm. The reference builds each stage once
+(``SELECT ... INTO stage.table``) and every later reader reads that
+table. Here a stage read more than once (by its QA gate, by later gates
+that join it in as a parent, by downstream builders and by the caller's
+writer) is persisted where it is built (:func:`cache_stage`): its gate's
+action fills the cache, and every later reader plans over the cached
+relation instead of re-running the stage's lineage. A stage read once
+stays a lazy DataFrame. "Promotion" is the caller's choice of writer
+(``sources.io.write_table`` / ``write_bucketed``); QA gates run as
+assertions and are returned as a log table like ``metadata.qa_mcaid``.
+The returned :class:`PipelineResult` owns the cache; the caller releases
+it with :meth:`PipelineResult.unpersist` once the tables are promoted.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from functools import partial
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,10 +58,45 @@ from claims_data_spark.tables.elig_month import build_elig_month
 from claims_data_spark.tables.elig_timevar import build_elig_timevar
 
 
+def cache_stage(df: DataFrame, held: list[DataFrame]) -> DataFrame:
+    """The engine's one stage-cache rule: persist ``df`` at the default
+    storage level and record it in ``held``, whose owner unpersists it.
+
+    Applied to every stage read more than once. Without it each reader
+    (the stage's gate, later gates, downstream builders, the writer)
+    re-runs the stage's lineage; with it the first action fills the
+    cache. A persist, not a ``localCheckpoint``: a lost block recomputes
+    from lineage, so the pipeline survives executor loss. A frame the
+    caller has already cached is returned as is and left to its owner."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    df = df.persist()
+    held.append(df)
+    return df
+
+
 @dataclass
 class PipelineResult:
-    tables: dict[str, DataFrame]
+    tables: dict[str, DataFrame] = field(default_factory=dict)
     qa: list[tuple[str, QaResult]] = field(default_factory=list)
+    # stages persisted by cache_stage; released by unpersist()
+    cached: list[DataFrame] = field(default_factory=list)
+
+    def unpersist(self) -> None:
+        """Release every cached stage (call once the tables are written)."""
+        for df in self.cached:
+            df.unpersist()
+        self.cached.clear()
+
+    @contextmanager
+    def released_on_error(self):
+        """Release the cache when the block raises (a strict gate's FAIL
+        included), then re-raise: a load that stops leaks no cache."""
+        try:
+            yield
+        except BaseException:
+            self.unpersist()
+            raise
 
     def qa_log(self, spark: SparkSession) -> DataFrame:
         by_table: dict[str, list[QaResult]] = {}
@@ -86,70 +131,81 @@ def run_mcaid_pipeline(
     running the reference's QA invariants after each stage.
 
     ``strict_qa=True`` raises on the first FAIL (the reference's
-    master script stops the load and emails); ``False`` records the
-    results and continues.
+    master script stops the load and emails), after releasing the
+    stages already cached; ``False`` records the results and continues.
+    The result holds ``elig_demo``, ``elig_timevar`` and the five claim
+    tables cached (see :func:`cache_stage`); ``elig_month``,
+    ``claim_ccw`` and ``claim_bh`` are read once and stay lazy.
     """
-    qa: list[tuple[str, QaResult]] = []
-    gate = partial(qa_gate, qa, strict=strict_qa)
+    res = PipelineResult()
+    gate = partial(qa_gate, res.qa, strict=strict_qa)
+    stage = partial(cache_stage, held=res.cached)
 
-    demo = build_elig_demo(raw_elig)
-    gate("elig_demo", *fused_table_qa(demo, unique_keys=["id_mcaid"]))
+    with res.released_on_error():
+        demo = stage(build_elig_demo(raw_elig))
+        gate("elig_demo", *fused_table_qa(demo, unique_keys=["id_mcaid"]))
 
-    timevar = build_elig_timevar(raw_elig, ref_rac, ref_address, ref_geocode)
-    # the reference's full table-level gate
-    # (qa_stage.mcaid_elig_timevar.R): one aggregate over the table,
-    # one over the raw extract for the golden-record spot checks
-    gate("elig_timevar", *timevar_golden_qa(timevar, raw_elig))
-
-    elig_month = build_elig_month(timevar)
-
-    # per-table reference suites (round 6): qa_stage.mcaid_claim_line/
-    # pharm/procedure/icdcm_header.R, each one fused aggregate
-    line = build_claim_line(raw_claim)
-    gate("claim_line", *qa_mcaid_claim_line(line, demo))
-    icdcm = build_claim_icdcm_header(raw_claim)
-    if ref_icdcm is not None:
-        gate(
-            "claim_icdcm_header",
-            *qa_mcaid_claim_icdcm_header(icdcm, demo, ref_icdcm),
+        timevar = stage(
+            build_elig_timevar(raw_elig, ref_rac, ref_address, ref_geocode)
         )
-    else:
-        gate("claim_icdcm_header", *fused_table_qa(
-            icdcm, checks={"ids-in-elig": InParent(demo, "id_mcaid")}
+        # the reference's full table-level gate
+        # (qa_stage.mcaid_elig_timevar.R): one aggregate over the table,
+        # one over the raw extract for the golden-record spot checks
+        gate("elig_timevar", *timevar_golden_qa(timevar, raw_elig))
+
+        elig_month = build_elig_month(timevar)
+
+        # per-table reference suites (round 6): qa_stage.mcaid_claim_line/
+        # pharm/procedure/icdcm_header.R, each one fused aggregate
+        line = stage(build_claim_line(raw_claim))
+        gate("claim_line", *qa_mcaid_claim_line(line, demo))
+        icdcm = stage(build_claim_icdcm_header(raw_claim))
+        if ref_icdcm is not None:
+            gate(
+                "claim_icdcm_header",
+                *qa_mcaid_claim_icdcm_header(icdcm, demo, ref_icdcm),
+            )
+        else:
+            gate("claim_icdcm_header", *fused_table_qa(
+                icdcm, checks={"ids-in-elig": InParent(demo, "id_mcaid")}
+            ))
+        procedure = stage(build_claim_procedure(raw_claim))
+        gate("claim_procedure", *qa_mcaid_claim_procedure(procedure, demo))
+        pharm = stage(build_claim_pharm(raw_claim))
+        gate("claim_pharm", *qa_mcaid_claim_pharm(pharm, demo))
+
+        header = stage(build_claim_header(
+            raw_claim, icdcm, ref_xwalk, ref_hedis, ref_telehealth, ref_icdcm
         ))
-    procedure = build_claim_procedure(raw_claim)
-    gate("claim_procedure", *qa_mcaid_claim_procedure(procedure, demo))
-    pharm = build_claim_pharm(raw_claim)
-    gate("claim_pharm", *qa_mcaid_claim_pharm(pharm, demo))
+        gate("claim_header", *fused_table_qa(
+            header,
+            unique_keys=["claim_header_id"],
+            event_ids=["ed_pophealth_id"],
+            person_id="id_mcaid",
+            checks={"claim-members-in-elig": InParent(timevar, "id_mcaid")},
+        ))
 
-    header = build_claim_header(
-        raw_claim, icdcm, ref_xwalk, ref_hedis, ref_telehealth, ref_icdcm
-    )
-    gate("claim_header", *fused_table_qa(
-        header,
-        unique_keys=["claim_header_id"],
-        event_ids=["ed_pophealth_id"],
-        person_id="id_mcaid",
-        checks={"claim-members-in-elig": InParent(timevar, "id_mcaid")},
-    ))
+        res.tables.update({
+            "elig_demo": demo,
+            "elig_timevar": timevar,
+            "elig_month": elig_month,
+            "claim_line": line,
+            "claim_icdcm_header": icdcm,
+            "claim_procedure": procedure,
+            "claim_pharm": pharm,
+            "claim_header": header,
+        })
 
-    tables = {
-        "elig_demo": demo,
-        "elig_timevar": timevar,
-        "elig_month": elig_month,
-        "claim_line": line,
-        "claim_icdcm_header": icdcm,
-        "claim_procedure": procedure,
-        "claim_pharm": pharm,
-        "claim_header": header,
-    }
+        if ref_icdcm is not None and ccw_config:
+            res.tables["claim_ccw"] = build_claim_ccw(
+                icdcm, header, ref_icdcm, ccw_config
+            )
+        if ref_rda is not None:
+            res.tables["claim_bh"] = build_claim_bh(
+                icdcm, pharm, procedure, ref_rda
+            )
 
-    if ref_icdcm is not None and ccw_config:
-        tables["claim_ccw"] = build_claim_ccw(icdcm, header, ref_icdcm, ccw_config)
-    if ref_rda is not None:
-        tables["claim_bh"] = build_claim_bh(icdcm, pharm, procedure, ref_rda)
-
-    return PipelineResult(tables=tables, qa=qa)
+    return res
 
 
 def mcare_header_qa(header: DataFrame) -> list[QaResult]:
@@ -208,8 +264,11 @@ def run_mcaid_mcare_pipeline(
     absent key skips that stage, mirroring the master script's
     section-by-section reruns.
 
-    Every stage stays lazy; QA gates are the only actions, exactly
-    like the per-source pipeline above.
+    The crosswalk, each gated child, both source headers and the
+    combined header are read more than once, so each is cached where it
+    is built (:func:`cache_stage`) and the result owns the cache; the
+    QA gates are the only actions, exactly like the per-source pipeline
+    above, and the first gate over a stage fills its cache.
     """
     from claims_data_spark.tables.conditions import (
         build_mcaid_mcare_claim_bh,
@@ -225,74 +284,83 @@ def run_mcaid_mcare_pipeline(
     )
     from claims_data_spark.tables.xwalk import build_xwalk
 
-    tables: dict[str, DataFrame] = {}
-    qa: list[tuple[str, QaResult]] = []
+    res = PipelineResult()
+    tables, qa = res.tables, res.qa
+    stage = partial(cache_stage, held=res.cached)
 
-    # identity linkage (the reference runs this before everything)
-    xwalk = build_xwalk(
-        mcaid_tables["persons"], mcare_tables["persons"],
-        match_cols=list(match_cols), pha_persons=pha_persons,
-    )
-    tables["xwalk_apde_mcaid_mcare_pha"] = xwalk
+    with res.released_on_error():
+        # identity linkage (the reference runs this before everything);
+        # every later stage joins it
+        xwalk = stage(build_xwalk(
+            mcaid_tables["persons"], mcare_tables["persons"],
+            match_cols=list(match_cols), pha_persons=pha_persons,
+        ))
+        tables["xwalk_apde_mcaid_mcare_pha"] = xwalk
 
-    if "demo" in mcaid_tables and "demo" in mcare_tables:
-        tables["mcaid_mcare_elig_demo"] = build_mcaid_mcare_elig_demo(
-            xwalk, mcaid_tables["demo"], mcare_tables["demo"]
-        )
-
-    def child(name: str, builder) -> None:
-        if name in mcaid_tables and name in mcare_tables:
-            out = builder(mcaid_tables[name], mcare_tables[name], xwalk)
-            qa.append((f"mcaid_mcare_{name}", combined_child_union_qa(
-                out, mcaid_tables[name], mcare_tables[name]
-            )))
-            tables[f"mcaid_mcare_{name}"] = out
-
-    child("claim_line", build_mcaid_mcare_union)
-    child("claim_icdcm_header", build_mcaid_mcare_claim_icdcm_header)
-    child("claim_procedure", build_mcaid_mcare_claim_procedure)
-    child("claim_provider", build_mcaid_mcare_union)
-    child("claim_pharm", build_mcaid_mcare_union)
-
-    if "claim_header" in mcaid_tables and "claim_header" in mcare_tables:
-        header = build_mcaid_mcare_claim_header(
-            mcaid_tables["claim_header"], mcare_tables["claim_header"], xwalk
-        )
-        tables["mcaid_mcare_claim_header"] = header
-        qa.extend(
-            ("mcaid_mcare_claim_header", r)
-            for r in combined_header_qa(header)
-        )
-        icdcm = tables.get("mcaid_mcare_claim_icdcm_header")
-        if icdcm is not None and ref_icdcm is not None and ccw_lookup_rows:
-            tables["mcaid_mcare_claim_ccw"] = build_mcaid_mcare_claim_ccw(
-                icdcm, header, ref_icdcm, ccw_lookup_rows
+        if "demo" in mcaid_tables and "demo" in mcare_tables:
+            tables["mcaid_mcare_elig_demo"] = build_mcaid_mcare_elig_demo(
+                xwalk, mcaid_tables["demo"], mcare_tables["demo"]
             )
-            # qa_stage.mcaid_mcare_claim_ccw.sql STEP 1: all configured
-            # conditions ran, zero NULL-id_apde header claims, zero
-            # mcare-source members missing from the xwalk
-            expected = [
-                r["ccw_abbrev"] for r in ccw_lookup_rows
-                if not r["ccw_abbrev"].endswith("_exclude1")
-                and not r["ccw_abbrev"].endswith("_exclude2")
-                and r["ccw_abbrev"] in ref_icdcm.columns
-            ]
-            qa.extend(
-                ("mcaid_mcare_claim_ccw", r)
-                for r in qa_mcaid_mcare_claim_ccw(
-                    tables["mcaid_mcare_claim_ccw"], header, xwalk,
-                    expected,
+
+        def child(name: str, builder) -> None:
+            if name in mcaid_tables and name in mcare_tables:
+                out = stage(
+                    builder(mcaid_tables[name], mcare_tables[name], xwalk)
                 )
-            )
-        pharm = tables.get("mcaid_mcare_claim_pharm")
-        proc = tables.get("mcaid_mcare_claim_procedure")
-        if (icdcm is not None and ref_rda is not None
-                and pharm is not None and proc is not None):
-            tables["mcaid_mcare_claim_bh"] = build_mcaid_mcare_claim_bh(
-                icdcm, pharm, proc, ref_rda
-            )
+                qa.append((f"mcaid_mcare_{name}", combined_child_union_qa(
+                    out, mcaid_tables[name], mcare_tables[name]
+                )))
+                tables[f"mcaid_mcare_{name}"] = out
 
-    return PipelineResult(tables=tables, qa=qa)
+        child("claim_line", build_mcaid_mcare_union)
+        child("claim_icdcm_header", build_mcaid_mcare_claim_icdcm_header)
+        child("claim_procedure", build_mcaid_mcare_claim_procedure)
+        child("claim_provider", build_mcaid_mcare_union)
+        child("claim_pharm", build_mcaid_mcare_union)
+
+        if "claim_header" in mcaid_tables and "claim_header" in mcare_tables:
+            # the builder reads each source header three times (the two
+            # event-id mints and the final join): cache them here
+            header = stage(build_mcaid_mcare_claim_header(
+                stage(mcaid_tables["claim_header"]),
+                stage(mcare_tables["claim_header"]),
+                xwalk,
+            ))
+            tables["mcaid_mcare_claim_header"] = header
+            qa.extend(
+                ("mcaid_mcare_claim_header", r)
+                for r in combined_header_qa(header)
+            )
+            icdcm = tables.get("mcaid_mcare_claim_icdcm_header")
+            if icdcm is not None and ref_icdcm is not None and ccw_lookup_rows:
+                tables["mcaid_mcare_claim_ccw"] = build_mcaid_mcare_claim_ccw(
+                    icdcm, header, ref_icdcm, ccw_lookup_rows
+                )
+                # qa_stage.mcaid_mcare_claim_ccw.sql STEP 1: all configured
+                # conditions ran, zero NULL-id_apde header claims, zero
+                # mcare-source members missing from the xwalk
+                expected = [
+                    r["ccw_abbrev"] for r in ccw_lookup_rows
+                    if not r["ccw_abbrev"].endswith("_exclude1")
+                    and not r["ccw_abbrev"].endswith("_exclude2")
+                    and r["ccw_abbrev"] in ref_icdcm.columns
+                ]
+                qa.extend(
+                    ("mcaid_mcare_claim_ccw", r)
+                    for r in qa_mcaid_mcare_claim_ccw(
+                        tables["mcaid_mcare_claim_ccw"], header, xwalk,
+                        expected,
+                    )
+                )
+            pharm = tables.get("mcaid_mcare_claim_pharm")
+            proc = tables.get("mcaid_mcare_claim_procedure")
+            if (icdcm is not None and ref_rda is not None
+                    and pharm is not None and proc is not None):
+                tables["mcaid_mcare_claim_bh"] = build_mcaid_mcare_claim_bh(
+                    icdcm, pharm, proc, ref_rda
+                )
+
+    return res
 
 
 def run_apcd_pipeline(
@@ -340,99 +408,107 @@ def run_apcd_pipeline(
     from claims_data_spark.tables.conditions import build_apcd_claim_ccw
     from claims_data_spark.tables.provider import build_ref_apcd_provider_npi
 
-    tables: dict[str, DataFrame] = {}
-    qa: list[tuple[str, QaResult]] = []
-    gate = partial(qa_gate, qa, strict=strict)
+    res = PipelineResult()
+    tables = res.tables
+    gate = partial(qa_gate, res.qa, strict=strict)
+    stage = partial(cache_stage, held=res.cached)
 
-    demo = None
-    if eligibility is not None:
-        demo = build_apcd_elig_demo(
-            member_month, eligibility,
-            ref_ethnicity_race_map=ref_ethnicity_race_map,
+    with res.released_on_error():
+        demo = None
+        if eligibility is not None:
+            demo = stage(build_apcd_elig_demo(
+                member_month, eligibility,
+                ref_ethnicity_race_map=ref_ethnicity_race_map,
+            ))
+            tables["apcd_elig_demo"] = demo
+        with_plr = bool(plr_years) and demo is not None
+        timevar = build_apcd_elig_timevar_full(
+            member_month, ref_zip_group=ref_zip_group,
+            ref_county_code=ref_county_code,
         )
-        tables["apcd_elig_demo"] = demo
-    timevar = build_apcd_elig_timevar_full(
-        member_month, ref_zip_group=ref_zip_group,
-        ref_county_code=ref_county_code,
-    )
-    tables["apcd_elig_timevar"] = timevar
-    tables["apcd_elig_month"] = build_apcd_elig_month(
-        member_month, ref_zip_group=ref_zip_group,
-        ref_county_code=ref_county_code,
-    )
-    if plr_years and demo is not None:
-        # one-pass multi-year PLR (a broadcast year dim range-joins the
-        # intervals) instead of the reference master's unrolled
-        # per-year calls — 11 timevar scans become one
-        multi = build_apcd_elig_plr_multi(
-            timevar, demo, list(plr_years), ref_zip_group=ref_zip_group
+        if with_plr:  # read by the PLR and by the caller's writer
+            timevar = stage(timevar)
+        tables["apcd_elig_timevar"] = timevar
+        tables["apcd_elig_month"] = build_apcd_elig_month(
+            member_month, ref_zip_group=ref_zip_group,
+            ref_county_code=ref_county_code,
         )
-        tables["apcd_elig_plr"] = multi
-        for y in plr_years:
-            tables[f"apcd_elig_plr_{y}"] = multi.filter(
-                F.col("plr_year") == int(y)
-            ).drop("plr_year")
+        if with_plr:
+            # one-pass multi-year PLR (a broadcast year dim range-joins the
+            # intervals) instead of the reference master's unrolled
+            # per-year calls — 11 timevar scans become one; every
+            # per-year table reads the cached multi-year frame
+            multi = stage(build_apcd_elig_plr_multi(
+                timevar, demo, list(plr_years), ref_zip_group=ref_zip_group
+            ))
+            tables["apcd_elig_plr"] = multi
+            for y in plr_years:
+                tables[f"apcd_elig_plr_{y}"] = multi.filter(
+                    F.col("plr_year") == int(y)
+                ).drop("plr_year")
 
-    if claim_header_raw is None:
-        return PipelineResult(tables=tables, qa=qa)
+        if claim_header_raw is None:
+            return res
 
-    # children BEFORE the header, exactly the reference's table order
-    # (Tables 4-7 then Table 10): the header builder consumes the
-    # staged child shapes (discharge_date, long dx/px grains), not the
-    # raw extracts
-    line_child = icdcm_child = procedure_child = None
-    if claim_line_raw is not None:
-        line_child = build_apcd_claim_line(claim_line_raw, claim_header_raw)
-        tables["apcd_claim_line"] = line_child
-    if claim_icdcm_raw is not None:
-        icdcm_child = build_apcd_claim_icdcm_header(
-            claim_icdcm_raw, claim_header_raw
-        )
-        tables["apcd_claim_icdcm_header"] = icdcm_child
-        gate("apcd_claim_icdcm_header",
-             *qa_apcd_child(icdcm_child, elig_demo=demo,
-                            not_null_col="icdcm_norm"))
-    if claim_procedure_raw is not None:
-        procedure_child = build_apcd_claim_procedure(
-            claim_procedure_raw, claim_header_raw
-        )
-        tables["apcd_claim_procedure"] = procedure_child
-    if claim_provider_raw is not None:
-        tables["apcd_claim_provider"] = build_apcd_claim_provider(
-            claim_provider_raw
-        )
-        # qa_stage.apcd_claim_provider.sql generalized: projection row
-        # parity with raw, provider id non-null, members in elig
-        gate("apcd_claim_provider",
-             *qa_apcd_claim_provider(
-                 tables["apcd_claim_provider"], claim_provider_raw,
-                 elig_demo=demo,
-             ))
-        if provider_master_raw is not None:
-            tables["ref_apcd_provider_npi"] = build_ref_apcd_provider_npi(
-                provider_master_raw, claim_provider_raw
+        # children BEFORE the header, exactly the reference's table order
+        # (Tables 4-7 then Table 10): the header builder consumes the
+        # staged child shapes (discharge_date, long dx/px grains), not the
+        # raw extracts
+        line_child = icdcm_child = procedure_child = None
+        if claim_line_raw is not None:
+            line_child = stage(
+                build_apcd_claim_line(claim_line_raw, claim_header_raw)
             )
+            tables["apcd_claim_line"] = line_child
+        if claim_icdcm_raw is not None:
+            icdcm_child = stage(build_apcd_claim_icdcm_header(
+                claim_icdcm_raw, claim_header_raw
+            ))
+            tables["apcd_claim_icdcm_header"] = icdcm_child
+            gate("apcd_claim_icdcm_header",
+                 *qa_apcd_child(icdcm_child, elig_demo=demo,
+                                not_null_col="icdcm_norm"))
+        if claim_procedure_raw is not None:
+            procedure_child = stage(build_apcd_claim_procedure(
+                claim_procedure_raw, claim_header_raw
+            ))
+            tables["apcd_claim_procedure"] = procedure_child
+        if claim_provider_raw is not None:
+            tables["apcd_claim_provider"] = stage(
+                build_apcd_claim_provider(claim_provider_raw)
+            )
+            # qa_stage.apcd_claim_provider.sql generalized: projection row
+            # parity with raw, provider id non-null, members in elig
+            gate("apcd_claim_provider",
+                 *qa_apcd_claim_provider(
+                     tables["apcd_claim_provider"], claim_provider_raw,
+                     elig_demo=demo,
+                 ))
+            if provider_master_raw is not None:
+                tables["ref_apcd_provider_npi"] = build_ref_apcd_provider_npi(
+                    provider_master_raw, claim_provider_raw
+                )
 
-    header = build_apcd_claim_header(
-        claim_header_raw,
-        line_child,
-        icdcm_child,
-        procedure_child,
-        ref_claim_status=ref_claim_status,
-        ref_xwalk=ref_xwalk,
-        ref_icdcm=ref_icdcm,
-    )
-    tables["apcd_claim_header"] = header
-    gate("apcd_claim_header",
-         *qa_apcd_claim_header(header, claim_header_raw, elig_demo=demo))
+        header = stage(build_apcd_claim_header(
+            claim_header_raw,
+            line_child,
+            icdcm_child,
+            procedure_child,
+            ref_claim_status=ref_claim_status,
+            ref_xwalk=ref_xwalk,
+            ref_icdcm=ref_icdcm,
+        ))
+        tables["apcd_claim_header"] = header
+        gate("apcd_claim_header",
+             *qa_apcd_claim_header(header, claim_header_raw, elig_demo=demo))
 
-    if ccw_lookup_rows and ref_icdcm is not None \
-            and claim_icdcm_raw is not None:
-        tables["apcd_claim_ccw"] = build_apcd_claim_ccw(
-            tables["apcd_claim_icdcm_header"], header, ref_icdcm,
-            ccw_lookup_rows,
-        )
-    return PipelineResult(tables=tables, qa=qa)
+        if ccw_lookup_rows and ref_icdcm is not None \
+                and claim_icdcm_raw is not None:
+            tables["apcd_claim_ccw"] = build_apcd_claim_ccw(
+                tables["apcd_claim_icdcm_header"], header, ref_icdcm,
+                ccw_lookup_rows,
+            )
+    return res
 
 
 def run_mcare_pipeline(
@@ -490,110 +566,118 @@ def run_mcare_pipeline(
         build_mcare_claim_pharm_char,
     )
 
-    tables: dict[str, DataFrame] = {}
-    qa: list[tuple[str, QaResult]] = []
-    gate = partial(qa_gate, qa, strict=strict)
+    res = PipelineResult()
+    tables = res.tables
+    gate = partial(qa_gate, res.qa, strict=strict)
+    stage = partial(cache_stage, held=res.cached)
 
-    demo = build_mcare_elig_demo(
-        bene_enrollment, ref_geo_kc_zip=ref_geo_kc_zip
-    )
-    tables["mcare_elig_demo"] = demo
-    gate("mcare_elig_demo",
-         *fused_table_qa(demo, unique_keys=["id_mcare"]))
-    tables["mcare_elig_timevar"] = build_mcare_elig_timevar(
-        bene_enrollment, elig_demo=demo, ref_geo_kc_zip=ref_geo_kc_zip
-    )
-    # the reference's full timevar suite (qa_stage.mcare_elig_timevar.R):
-    # dup-row/interval/overlap fused + distinct-id parity with MBSF
-    gate("mcare_elig_timevar",
-         *qa_mcare_elig_timevar(tables["mcare_elig_timevar"],
-                                bene_enrollment))
-    tables["mcare_elig_month"] = build_mcare_elig_month(
-        bene_enrollment, elig_demo=demo, ref_geo_kc_zip=ref_geo_kc_zip
-    )
-
-    if not claim_sources:
-        return PipelineResult(tables=tables, qa=qa)
-    enrollment = bene_enrollment.select(
-        F.col("bene_id") if "bene_id" in bene_enrollment.columns
-        else F.col("id_mcare").alias("bene_id")
-    ).distinct()
-
-    icdcm = build_mcare_claim_icdcm_header(claim_sources, enrollment)
-    tables["mcare_claim_icdcm_header"] = icdcm
-    procedure = pharm = None
-    if line_sources:
-        # claim_line's per-filetype contract is (line_df, base_df) —
-        # the reverse of procedure's (base, detail) pairs
-        tables["mcare_claim_line"] = build_mcare_claim_line(
-            {k: (detail, base) for k, (base, detail) in
-             line_sources.items() if detail is not None},
-            enrollment,
+    with res.released_on_error():
+        demo = stage(build_mcare_elig_demo(
+            bene_enrollment, ref_geo_kc_zip=ref_geo_kc_zip
+        ))
+        tables["mcare_elig_demo"] = demo
+        gate("mcare_elig_demo",
+             *fused_table_qa(demo, unique_keys=["id_mcare"]))
+        tables["mcare_elig_timevar"] = stage(build_mcare_elig_timevar(
+            bene_enrollment, elig_demo=demo, ref_geo_kc_zip=ref_geo_kc_zip
+        ))
+        # the reference's full timevar suite (qa_stage.mcare_elig_timevar.R):
+        # dup-row/interval/overlap fused + distinct-id parity with MBSF
+        gate("mcare_elig_timevar",
+             *qa_mcare_elig_timevar(tables["mcare_elig_timevar"],
+                                    bene_enrollment))
+        tables["mcare_elig_month"] = build_mcare_elig_month(
+            bene_enrollment, elig_demo=demo, ref_geo_kc_zip=ref_geo_kc_zip
         )
-        procedure = build_mcare_claim_procedure(line_sources, enrollment)
-        tables["mcare_claim_procedure"] = procedure
-        facility_only = {
-            k: (detail, base) for k, (base, detail) in line_sources.items()
-            if detail is not None and k not in ("carrier", "dme")
+
+        if not claim_sources:
+            return res
+        enrollment = bene_enrollment.select(
+            F.col("bene_id") if "bene_id" in bene_enrollment.columns
+            else F.col("id_mcare").alias("bene_id")
+        ).distinct()
+
+        icdcm = stage(
+            build_mcare_claim_icdcm_header(claim_sources, enrollment)
+        )
+        tables["mcare_claim_icdcm_header"] = icdcm
+        procedure = pharm = None
+        if line_sources:
+            # claim_line's per-filetype contract is (line_df, base_df) —
+            # the reverse of procedure's (base, detail) pairs
+            tables["mcare_claim_line"] = build_mcare_claim_line(
+                {k: (detail, base) for k, (base, detail) in
+                 line_sources.items() if detail is not None},
+                enrollment,
+            )
+            procedure = stage(
+                build_mcare_claim_procedure(line_sources, enrollment)
+            )
+            tables["mcare_claim_procedure"] = procedure
+            facility_only = {
+                k: (detail, base) for k, (base, detail) in line_sources.items()
+                if detail is not None and k not in ("carrier", "dme")
+            }
+            pharm = stage(
+                build_mcare_claim_pharm(facility_only, pde, enrollment)
+            )
+            tables["mcare_claim_pharm"] = pharm
+        # standardize the CMS NPI role names per filetype before the
+        # provider unpivot (the builder's contract is caller-side aliasing
+        # because the vocabulary differs per vintage)
+        _ROLE_ALIASES = {
+            "at_physn_npi": "attending", "op_physn_npi": "operating",
+            "ot_physn_npi": "other", "org_npi_num": "organization",
+            "rndrng_physn_npi": "rendering",
+            "carr_clm_blg_npi_num": "billing", "rfr_physn_npi": "referring",
         }
-        pharm = build_mcare_claim_pharm(facility_only, pde, enrollment)
-        tables["mcare_claim_pharm"] = pharm
-    # standardize the CMS NPI role names per filetype before the
-    # provider unpivot (the builder's contract is caller-side aliasing
-    # because the vocabulary differs per vintage)
-    _ROLE_ALIASES = {
-        "at_physn_npi": "attending", "op_physn_npi": "operating",
-        "ot_physn_npi": "other", "org_npi_num": "organization",
-        "rndrng_physn_npi": "rendering",
-        "carr_clm_blg_npi_num": "billing", "rfr_physn_npi": "referring",
-    }
-    prov_sources = {}
-    for ft, df in claim_sources.items():
-        renamed = df
-        for src, role in _ROLE_ALIASES.items():
-            if src in df.columns:
-                renamed = renamed.withColumnRenamed(src, role)
-        if any(r in renamed.columns for r in _ROLE_ALIASES.values()):
-            prov_sources[ft] = renamed
-    if prov_sources:
-        tables["mcare_claim_provider"] = build_mcare_claim_provider(
-            prov_sources
-        )
-    if pharm_char_raw is not None:
-        tables["mcare_claim_pharm_char"] = build_mcare_claim_pharm_char(
-            pharm_char_raw
-        )
+        prov_sources = {}
+        for ft, df in claim_sources.items():
+            renamed = df
+            for src, role in _ROLE_ALIASES.items():
+                if src in df.columns:
+                    renamed = renamed.withColumnRenamed(src, role)
+            if any(r in renamed.columns for r in _ROLE_ALIASES.values()):
+                prov_sources[ft] = renamed
+        if prov_sources:
+            tables["mcare_claim_provider"] = build_mcare_claim_provider(
+                prov_sources
+            )
+        if pharm_char_raw is not None:
+            tables["mcare_claim_pharm_char"] = build_mcare_claim_pharm_char(
+                pharm_char_raw
+            )
 
-    # the header consumes the HARMONIZED cross-filetype union (the
-    # raw->stage layer produced by mcare_facility_stage /
-    # bcarrier/dme vintage maps), not the raw CMS extracts the child
-    # builders take — mirror of the reference where Table 9 reads the
-    # stage tables Tables 3-8 already built
-    header = None
-    if harmonized_header is not None:
-        header = build_mcare_claim_header(
-            harmonized_header, harmonized_line, icdcm, procedure,
-            ref_xwalk=ref_xwalk, ref_pc_oregon=ref_pc_oregon,
-        )
-        tables["mcare_claim_header"] = header
-        gate("mcare_claim_header", *mcare_header_qa(header))
+        # the header consumes the HARMONIZED cross-filetype union (the
+        # raw->stage layer produced by mcare_facility_stage /
+        # bcarrier/dme vintage maps), not the raw CMS extracts the child
+        # builders take — mirror of the reference where Table 9 reads the
+        # stage tables Tables 3-8 already built
+        header = None
+        if harmonized_header is not None:
+            header = stage(build_mcare_claim_header(
+                harmonized_header, harmonized_line, icdcm, procedure,
+                ref_xwalk=ref_xwalk, ref_pc_oregon=ref_pc_oregon,
+            ))
+            tables["mcare_claim_header"] = header
+            gate("mcare_claim_header", *mcare_header_qa(header))
 
-    if header is not None and ref_icdcm is not None and ccw_lookup_rows:
-        tables["mcare_claim_ccw"] = build_mcare_claim_ccw(
-            icdcm, header, ref_icdcm, ccw_lookup_rows
-        )
-    if ref_rda is not None and pharm is not None and procedure is not None:
-        tables["mcare_claim_bh"] = build_mcare_claim_bh(
-            icdcm, pharm, procedure, ref_rda
-        )
-    if header is not None and oud_dx_codes is not None \
-            and procedure is not None:
-        tables["mcare_claim_moud"] = build_mcare_claim_moud(
-            procedure, header, pharm, oud_dx_codes
-        )
-    if ref_naloxone_ndc is not None and pharm is not None \
-            and procedure is not None:
-        tables["mcare_claim_naloxone"] = build_mcare_claim_naloxone(
-            pharm, procedure, ref_naloxone_ndc
-        )
-    return PipelineResult(tables=tables, qa=qa)
+        if header is not None and ref_icdcm is not None and ccw_lookup_rows:
+            tables["mcare_claim_ccw"] = build_mcare_claim_ccw(
+                icdcm, header, ref_icdcm, ccw_lookup_rows
+            )
+        if ref_rda is not None and pharm is not None and procedure is not None:
+            tables["mcare_claim_bh"] = build_mcare_claim_bh(
+                icdcm, pharm, procedure, ref_rda
+            )
+        if header is not None and oud_dx_codes is not None \
+                and procedure is not None:
+            tables["mcare_claim_moud"] = build_mcare_claim_moud(
+                procedure, header, pharm, oud_dx_codes
+            )
+        if ref_naloxone_ndc is not None and pharm is not None \
+                and procedure is not None:
+            tables["mcare_claim_naloxone"] = build_mcare_claim_naloxone(
+                pharm, procedure, ref_naloxone_ndc
+            )
+    return res

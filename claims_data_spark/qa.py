@@ -68,12 +68,15 @@ def gate(
 def one_person(event_id: str, person_id: str) -> Stat:
     """No event id spans more than one person
     (``load_stage.apcd_claim_header.R:1165-1212``): a per-row window
-    flag, its max in the aggregate."""
+    flag, its max in the aggregate. An event spans several persons
+    exactly when the min and max non-NULL person over its rows differ.
+    NULL-event rows are partitioned by person too, so they spread out
+    instead of piling into one window partition, and flag nothing."""
     flag = f"_multi_{event_id}"
+    ev, person = F.col(event_id), F.col(person_id)
+    w = Window.partitionBy(ev, F.when(ev.isNull(), person))
     multi = F.when(
-        F.col(event_id).isNotNull()
-        & (F.size(F.collect_set(person_id).over(Window.partitionBy(event_id))) > 1),
-        1,
+        F.min(person).over(w) != F.max(person).over(w), 1
     ).otherwise(0)
     return Stat(
         aggs=(F.max(flag).alias(flag),),

@@ -313,6 +313,10 @@ def build_mcaid_mcare_claim_header(
       inpatient_flag?/inpatient_id?, pc_visit_id?/pc_visit_flag?
     - mcare: same with id_mcare
     - xwalk: (id_apde, id_mcaid, id_mcare)
+
+    The union is read three times (both mints and the final join); the
+    builder caches nothing, so a caller that runs it more than once
+    caches the two source headers (``run_mcaid_mcare_pipeline`` does).
     """
     def _norm(df: DataFrame, src: str, id_col: str) -> DataFrame:
         d = df.join(
@@ -353,7 +357,7 @@ def build_mcaid_mcare_claim_header(
 
     both = _norm(mcaid_header, "mcaid", "id_mcaid").unionByName(
         _norm(mcare_header, "mcare", "id_mcare")
-    ).persist()
+    )
 
     # re-mint event ids over (id_apde, date) — the reference's
     # dense_rank with nulls sorted to the bottom is equivalent to

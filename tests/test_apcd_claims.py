@@ -265,4 +265,5 @@ def test_run_apcd_pipeline_end_to_end(spark):
     assert 7 not in ids and 1 in ids
     # QA log materializes with no hard failures on the fused suite
     fails = [f"{t}:{r[0]}" for t, r in result.failures()]
+    result.unpersist()
     assert fails == [], fails

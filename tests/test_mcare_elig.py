@@ -257,4 +257,5 @@ def test_run_mcare_pipeline_end_to_end(spark):
           result.tables["mcare_claim_procedure"].collect()}
     assert {"99284", "0TY10Z0"} <= px
     # header invariants hold on the harmonized union
+    result.unpersist()
     assert result.failures() == []

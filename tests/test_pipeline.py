@@ -46,6 +46,32 @@ def test_full_pipeline_with_qa(spark):
     # downstream tables materialize
     assert result.tables["claim_ccw"].count() > 0
     assert result.tables["claim_bh"].count() > 0
+    result.unpersist()
+
+
+def test_cached_stage_writes_run_one_job_each(spark, tmp_path):
+    """The gates fill each stage's cache, so promoting a cached stage is
+    one job that scans the cache and leaves one file (AQE coalesces the
+    cached plan), instead of re-running the stage's lineage."""
+    from claims_data_spark.sources.io import write_table
+
+    result = run_mcaid_pipeline(
+        spark, fx.raw_mcaid_elig(spark), fx.raw_mcaid_claim(spark),
+        **_mcaid_refs(spark),
+    )
+    assert result.failures() == []
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    try:
+        for name in ("elig_demo", "elig_timevar", "claim_line",
+                     "claim_icdcm_header", "claim_procedure", "claim_pharm",
+                     "claim_header"):
+            out = tmp_path / name
+            before = dag.numTotalJobs()
+            write_table(result.tables[name], str(out))
+            assert dag.numTotalJobs() - before == 1, name
+            assert len(list(out.glob("*.parquet"))) == 1, name
+    finally:
+        result.unpersist()
 
 
 def test_pipeline_strict_qa_raises(spark):
@@ -66,6 +92,7 @@ def test_pipeline_strict_qa_raises(spark):
         ref_xwalk=fx.ref_claim_type_xwalk(spark),
         strict_qa=False,
     )
+    result.unpersist()
     assert any(t == "claim_line" for t, _ in result.failures())
 
 
@@ -89,6 +116,7 @@ def test_run_mcaid_pipeline_one_action_per_gate(spark, monkeypatch):
         monkeypatch.setattr(cls, name, counted)
     result = run_mcaid_pipeline(spark, raw_elig, raw_claim, **refs)
     monkeypatch.undo()
+    result.unpersist()
     assert len(result.qa) == 22 and result.failures() == []
     assert len(actions) == 8, actions
 
@@ -101,6 +129,7 @@ def test_pipeline_records_claim_members_missing_from_elig(spark):
         ref_xwalk=fx.ref_claim_type_xwalk(spark),
         strict_qa=False,
     )
+    result.unpersist()
     failed = {(t, r[0]) for t, r in result.failures()}
     assert ("claim_line", "ids-in-elig") in failed
     assert ("claim_header", "claim-members-in-elig") in failed
@@ -217,6 +246,7 @@ def test_run_mcaid_mcare_pipeline_end_to_end(spark):
     srcs = {r["source_desc"] for r in
             combined_icdcm.select("source_desc").distinct().collect()}
     assert srcs == {"mcaid", "mcare"}
+    result.unpersist()
 
 
 def test_xwalk_qa_growth_and_uniqueness(spark):

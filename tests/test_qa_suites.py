@@ -317,3 +317,21 @@ def test_timevar_date_range_names_empty_side(spark, raw_rows, empty):
     )
     got = _by_name(timevar_golden_qa(timevar, raw))
     assert got["date-range"] == (False, empty)
+
+
+@pytest.mark.parametrize("rows, ok, detail", [
+    # event 1 spans p1 and p2
+    ([(1, "p1"), (1, "p2"), (2, "p3")], False, "multi-person-events=1"),
+    # one person per event; NULL persons are ignored
+    ([(1, "p1"), (1, None), (2, "p2")], True, "multi-person-events=0"),
+    # NULL events never span persons, whoever holds them
+    ([(None, "p1"), (None, "p2"), (None, None), (3, "p3")], True,
+     "multi-person-events=0"),
+    ([(None, None), (None, None)], True, "multi-person-events=0"),
+])
+def test_one_person_verdict(spark, rows, ok, detail):
+    header = spark.createDataFrame(rows, "event_id long, id_mcaid string")
+    got = _by_name(fused_table_qa(
+        header, event_ids=["event_id"], person_id="id_mcaid"
+    ))
+    assert got["one-person(event_id)"] == (ok, detail)

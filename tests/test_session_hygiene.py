@@ -1,14 +1,22 @@
 """Engine code leaves the shared session as the caller configured it:
 no session-conf writes and no cache entries left behind by the
-dense-id builders or the centroid rankers."""
+dense-id builders, the centroid rankers or the combined claim header;
+the master pipelines' stage caches are owned by their result and
+released by it, also when a strict gate stops the load."""
 
 from __future__ import annotations
 
 import datetime as dt
 from pathlib import Path
 
+import pytest
+from pyspark.sql import functions as F
+
 import claims_data_spark
+import tests.fixtures as fx
 from claims_data_spark.operators.episodes import episode_table
+from claims_data_spark.pipeline import run_mcaid_pipeline
+from claims_data_spark.tables.mcare import build_mcaid_mcare_claim_header
 from claims_data_spark.tables.pregnancy import build_preg_episodes
 from claims_data_spark.tables.xwalk import build_xwalk
 
@@ -82,3 +90,81 @@ def test_centroid_rankers_leave_no_cached_plans(spark):
         df, "embedding", "vec_id", [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]], 1
     ).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_combined_claim_header_leaves_no_cached_plans(spark):
+    """build_mcaid_mcare_claim_header caches nothing: its caller owns
+    any cache of the source headers it reads three times."""
+    spark.catalog.clearCache()
+    mcaid = spark.createDataFrame(
+        [("p1", "1", 4, d("2024-01-05"), d("2024-01-05"), 1)],
+        "id_mcaid string, claim_header_id string, claim_type_id int, "
+        "first_service_date date, last_service_date date, "
+        "ed_pophealth_id long",
+    )
+    mcare = spark.createDataFrame(
+        [("M1", "C-1", 4, d("2024-01-06"), d("2024-01-06"), 1)],
+        "id_mcare string, claim_header_id string, claim_type_id int, "
+        "first_service_date date, last_service_date date, "
+        "ed_pophealth_id long",
+    )
+    rows = build_mcaid_mcare_claim_header(
+        mcaid, mcare, fx.xwalk_apde_mcaid_mcare(spark)
+    ).collect()
+    assert len(rows) == 2
+    assert _cache_is_empty(spark)
+
+
+def test_pipeline_result_releases_its_stage_cache(spark):
+    """run_mcaid_pipeline caches its multiply-read stages and the
+    result's unpersist() releases every one of them."""
+    spark.catalog.clearCache()
+    result = run_mcaid_pipeline(
+        spark, fx.raw_mcaid_elig(spark), fx.raw_mcaid_claim(spark),
+        ref_xwalk=fx.ref_claim_type_xwalk(spark),
+    )
+    assert result.failures() == []
+    assert len(result.cached) == 7 and not _cache_is_empty(spark)
+    result.unpersist()
+    assert result.cached == [] and _cache_is_empty(spark)
+
+
+def test_strict_gate_failure_releases_stage_cache(spark):
+    """A strict gate that stops the load releases the stages cached
+    before it: duplicate claim lines fail claim_line's gate after
+    elig_demo, elig_timevar and claim_line were cached."""
+    spark.catalog.clearCache()
+    raw_claim = fx.raw_mcaid_claim(spark)
+    dup = raw_claim.unionByName(
+        raw_claim.limit(1).withColumn(
+            "FROM_SRVC_DATE", F.date_add("FROM_SRVC_DATE", 1)
+        )
+    )
+    with pytest.raises(AssertionError, match="QA FAIL claim_line"):
+        run_mcaid_pipeline(
+            spark, fx.raw_mcaid_elig(spark), dup,
+            ref_xwalk=fx.ref_claim_type_xwalk(spark),
+        )
+    assert _cache_is_empty(spark)
+
+
+def test_cache_stage_leaves_caller_caches_to_their_owner(spark):
+    """A stage the caller already cached is not recorded, so the
+    pipeline result's unpersist() cannot release the caller's cache."""
+    from claims_data_spark.pipeline import PipelineResult, cache_stage
+
+    spark.catalog.clearCache()
+    res = PipelineResult()
+    callers = spark.range(3).cache()
+    assert cache_stage(callers, res.cached) is callers
+    ours = cache_stage(spark.range(4), res.cached)
+    assert res.cached == [ours]
+    res.unpersist()
+    assert callers.storageLevel.useMemory
+    assert not ours.storageLevel.useMemory
+    callers.unpersist()
+    assert _cache_is_empty(spark)
