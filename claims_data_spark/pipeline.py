@@ -13,7 +13,18 @@ that join it in as a parent, by downstream builders and by the caller's
 writer) is persisted where it is built (:func:`cache_stage`): its gate's
 action fills the cache, and every later reader plans over the cached
 relation instead of re-running the stage's lineage. A stage read once
-stays a lazy DataFrame. "Promotion" is the caller's choice of writer
+stays a lazy DataFrame.
+
+The reference inputs a caller passes in (the ``ref.*`` lookups the
+reference loads once into SQL tables) follow the same rule: each
+pipeline caches every reference it is given before its first stage
+(:func:`cache_refs`). Builders, gates and writes then scan the cached
+copy instead of re-reading the caller's source, which for a reference
+built from Python rows is a Python-worker task per scan. A reference
+that is already driver-local (``isLocal()``) is left uncached, since
+its scans run no job.
+
+"Promotion" is the caller's choice of writer
 (``sources.io.write_table`` / ``write_bucketed``); QA gates run as
 assertions and are returned as a log table like ``metadata.qa_mcaid``.
 The returned :class:`PipelineResult` owns the cache; the caller releases
@@ -62,28 +73,42 @@ def cache_stage(df: DataFrame, held: list[DataFrame]) -> DataFrame:
     """The engine's one stage-cache rule: persist ``df`` at the default
     storage level and record it in ``held``, whose owner unpersists it.
 
-    Applied to every stage read more than once. Without it each reader
-    (the stage's gate, later gates, downstream builders, the writer)
-    re-runs the stage's lineage; with it the first action fills the
-    cache. A persist, not a ``localCheckpoint``: a lost block recomputes
-    from lineage, so the pipeline survives executor loss. A frame the
-    caller has already cached is returned as is and left to its owner."""
-    if df.storageLevel != StorageLevel.NONE:
+    Applied to every stage read more than once and to every reference
+    input a pipeline is given (:func:`cache_refs`). Without it each
+    reader (the stage's gate, later gates, downstream builders, the
+    writer) re-runs the frame's lineage; with it the first action fills
+    the cache. A persist, not a ``localCheckpoint``: a lost block
+    recomputes from lineage, so the pipeline survives executor loss. A
+    frame the caller has already cached is returned as is and left to
+    its owner, and so is a driver-local frame (``isLocal()``, a
+    ``LocalRelation``): its scans run no job, so a cache would only add
+    one."""
+    if df.storageLevel != StorageLevel.NONE or df.isLocal():
         return df
     df = df.persist()
     held.append(df)
     return df
 
 
+def cache_refs(
+    held: list[DataFrame], *refs: DataFrame | None
+) -> list[DataFrame | None]:
+    """:func:`cache_stage` over each reference input, in order; a
+    reference the caller did not give (``None``) stays ``None``."""
+    return [None if r is None else cache_stage(r, held) for r in refs]
+
+
 @dataclass
 class PipelineResult:
     tables: dict[str, DataFrame] = field(default_factory=dict)
     qa: list[tuple[str, QaResult]] = field(default_factory=list)
-    # stages persisted by cache_stage; released by unpersist()
+    # stages and reference inputs persisted by cache_stage; released by
+    # unpersist()
     cached: list[DataFrame] = field(default_factory=list)
 
     def unpersist(self) -> None:
-        """Release every cached stage (call once the tables are written)."""
+        """Release every cached stage and reference (call once the tables
+        are written)."""
         for df in self.cached:
             df.unpersist()
         self.cached.clear()
@@ -133,15 +158,21 @@ def run_mcaid_pipeline(
     ``strict_qa=True`` raises on the first FAIL (the reference's
     master script stops the load and emails), after releasing the
     stages already cached; ``False`` records the results and continues.
-    The result holds ``elig_demo``, ``elig_timevar`` and the five claim
-    tables cached (see :func:`cache_stage`); ``elig_month``,
-    ``claim_ccw`` and ``claim_bh`` are read once and stay lazy.
+    The result holds ``elig_demo``, ``elig_timevar``, the five claim
+    tables and every reference given cached (see :func:`cache_stage`);
+    ``elig_month``, ``claim_ccw`` and ``claim_bh`` are read once and stay
+    lazy.
     """
     res = PipelineResult()
     gate = partial(qa_gate, res.qa, strict=strict_qa)
     stage = partial(cache_stage, held=res.cached)
 
     with res.released_on_error():
+        (ref_rac, ref_address, ref_geocode, ref_xwalk, ref_hedis,
+         ref_telehealth, ref_icdcm, ref_rda) = cache_refs(
+            res.cached, ref_rac, ref_address, ref_geocode, ref_xwalk,
+            ref_hedis, ref_telehealth, ref_icdcm, ref_rda,
+        )
         demo = stage(build_elig_demo(raw_elig))
         gate("elig_demo", *fused_table_qa(demo, unique_keys=["id_mcaid"]))
 
@@ -266,7 +297,8 @@ def run_mcaid_mcare_pipeline(
 
     The crosswalk, each gated child, both source headers and the
     combined header are read more than once, so each is cached where it
-    is built (:func:`cache_stage`) and the result owns the cache; the
+    is built (:func:`cache_stage`), as is each reference given, and the
+    result owns the cache; the
     QA gates are the only actions, exactly like the per-source pipeline
     above, and the first gate over a stage fills its cache.
     """
@@ -289,6 +321,7 @@ def run_mcaid_mcare_pipeline(
     stage = partial(cache_stage, held=res.cached)
 
     with res.released_on_error():
+        ref_icdcm, ref_rda = cache_refs(res.cached, ref_icdcm, ref_rda)
         # identity linkage (the reference runs this before everything);
         # every later stage joins it
         xwalk = stage(build_xwalk(
@@ -390,7 +423,8 @@ def run_apcd_pipeline(
     eleven-invariant QA suite) -> claim_ccw.  Claim stages are
     skipped when their raw extract is not supplied, mirroring the
     master script's section reruns; PLR builds once per year in
-    ``plr_years`` (the reference's 2014-2024 unrolled calls).
+    ``plr_years`` (the reference's 2014-2024 unrolled calls). Every
+    reference given is cached first (:func:`cache_refs`).
     """
     from claims_data_spark.tables.apcd import (
         build_apcd_claim_header,
@@ -414,6 +448,11 @@ def run_apcd_pipeline(
     stage = partial(cache_stage, held=res.cached)
 
     with res.released_on_error():
+        (ref_claim_status, ref_xwalk, ref_icdcm, ref_ethnicity_race_map,
+         ref_zip_group, ref_county_code) = cache_refs(
+            res.cached, ref_claim_status, ref_xwalk, ref_icdcm,
+            ref_ethnicity_race_map, ref_zip_group, ref_county_code,
+        )
         demo = None
         if eligibility is not None:
             demo = stage(build_apcd_elig_demo(
@@ -542,6 +581,8 @@ def run_mcare_pipeline(
     (base_claims, detail) pairs for the line/procedure/pharm grains —
     both exactly the per-builder contracts, so a section is skipped
     when its extract is absent (the master script's rerun pattern).
+    Every reference given, ``oud_dx_codes`` included, is cached first
+    (:func:`cache_refs`).
     """
     from claims_data_spark.tables.conditions import (
         build_mcare_claim_bh,
@@ -572,6 +613,11 @@ def run_mcare_pipeline(
     stage = partial(cache_stage, held=res.cached)
 
     with res.released_on_error():
+        (ref_geo_kc_zip, ref_xwalk, ref_pc_oregon, ref_icdcm, ref_rda,
+         ref_naloxone_ndc, oud_dx_codes) = cache_refs(
+            res.cached, ref_geo_kc_zip, ref_xwalk, ref_pc_oregon, ref_icdcm,
+            ref_rda, ref_naloxone_ndc, oud_dx_codes,
+        )
         demo = stage(build_mcare_elig_demo(
             bene_enrollment, ref_geo_kc_zip=ref_geo_kc_zip
         ))

@@ -14,7 +14,10 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _DECIMAL_RE = re.compile(r"^(?:numeric|decimal)\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)$")
 _VARCHAR_RE = re.compile(r"^(?:var)?char\s*\(\s*(\d+|max)\s*\)$")
@@ -68,6 +71,18 @@ def struct_type(vars_dict: dict[str, str], nullable: bool = True) -> T.StructTyp
     return T.StructType(
         [T.StructField(col, sql_type_to_spark(t), nullable) for col, t in vars_dict.items()]
     )
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s column order) as a driver-local
+    frame: a ``LocalRelation`` built from an Arrow table of the declared
+    types. ``createDataFrame`` of a Python list is a Python RDD instead,
+    and every scan of it runs Python worker tasks."""
+    struct = T.StructType.fromDDL(schema)
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    ))
 
 
 class SchemaRegistry:

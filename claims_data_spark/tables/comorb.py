@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from claims_data_spark.schema import local_frame
 from claims_data_spark.tables.comorb_catalog import (
     COMORB_COND_LOOKUP,
     COMORB_DX_RULES,
@@ -62,10 +63,11 @@ _REF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 
 
 def _memo_df(spark: SparkSession, key: str, rows, schema: str) -> DataFrame:
+    """``rows`` as a driver-local frame (:func:`local_frame`), memoized."""
     per_session = _REF_CACHE.setdefault(spark, {})
     df = per_session.get(key)
     if df is None:
-        df = spark.createDataFrame(rows, schema)
+        df = local_frame(spark, rows, schema)
         per_session[key] = df
     return df
 

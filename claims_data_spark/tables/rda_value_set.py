@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from claims_data_spark.schema import local_frame
+
 ICD_SETS = ("ICD9CM", "ICD10CM")
 
 # ---------------------------------------------------------------------------
@@ -459,27 +461,24 @@ def no_harms_extra_codes(spark, ref_icdcm: DataFrame | None = None) -> DataFrame
     """Step 5b: the 66 APDE-added ICD-10 self-harm codes. Descriptions
     come from the main assignment join (``_fill_desc`` marker), NOT a
     second broadcast of the ICD-CM reference — when ``ref_icdcm`` is
-    passed (standalone use) the old direct describe-join shape runs."""
-    extra = spark.createDataFrame(
-        [(c,) for c in NO_HARMS_ICD10_CODES], "code string"
-    ).select(
-        F.lit("mh").alias("value_set_group"),
-        F.lit("apde-added-diagnosis").alias("value_set_name"),
-        F.lit("diagnosis").alias("data_source_type"),
-        F.lit("ICD10CM").alias("code_set"),
-        "code",
-        F.lit(10).cast("int").alias("icdcm_version"),
-        F.lit("mh_other").alias("sub_group_condition"),
-    )
+    passed (standalone use) the old direct describe-join shape runs.
+    The rows are a driver-local frame (:func:`local_frame`), so scanning
+    them runs no Python worker tasks."""
+    rows = [("mh", "apde-added-diagnosis", "diagnosis", "ICD10CM", c, 10,
+             "mh_other") for c in NO_HARMS_ICD10_CODES]
+    schema = ("value_set_group string, value_set_name string,"
+              " data_source_type string, code_set string, code string,"
+              " icdcm_version int, sub_group_condition string")
     if ref_icdcm is None:
-        return extra.withColumns(
-            {"desc": F.lit(None).cast("string"), "_fill_desc": F.lit(1)}
-        )
+        return local_frame(spark, [r + (None, 1) for r in rows],
+                           schema + ", desc string, _fill_desc int")
     descs = ref_icdcm.filter(F.col("icdcm_version") == 10).select(
         F.col("icdcm").alias("code"),
         F.upper(F.col("icdcm_description")).alias("desc"),
     )
-    return extra.join(F.broadcast(descs), "code", "left")
+    return local_frame(spark, rows, schema).join(
+        F.broadcast(descs), "code", "left"
+    )
 
 
 def moud_procedure_rows(moud_proc: DataFrame) -> DataFrame:

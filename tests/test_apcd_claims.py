@@ -232,6 +232,10 @@ def test_run_apcd_pipeline_end_to_end(spark):
         "last_service_dt": F.col("last_service_dt").cast("date"),
         "discharge_dt": F.col("discharge_dt").cast("date"),
     })
+    refs = dict(
+        ref_claim_status=fx.ref_apcd_claim_status(spark),
+        ref_xwalk=fx.ref_kc_claim_type_xwalk_apcd(spark),
+    )
     result = run_apcd_pipeline(
         mm,
         eligibility=elig,
@@ -246,11 +250,12 @@ def test_run_apcd_pipeline_end_to_end(spark):
             "last_service_dt": F.lit("2019-04-10").cast("date"),
             "modifier_code": F.lit(None).cast("string"),
         }),
-        ref_claim_status=fx.ref_apcd_claim_status(spark),
-        ref_xwalk=fx.ref_kc_claim_type_xwalk_apcd(spark),
+        **refs,
         plr_years=[2019],
         strict=False,
     )
+    # every Python-built reference is cached once, by the pipeline
+    assert all(any(df is r for df in result.cached) for r in refs.values())
     expect = {"apcd_elig_demo", "apcd_elig_timevar", "apcd_elig_month",
               "apcd_elig_plr_2019", "apcd_claim_header",
               "apcd_claim_line", "apcd_claim_icdcm_header",

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from claims_data_spark.tables.comorb import (
+    _rules_df,
     build_comorb_cond_lookup,
     build_comorb_dx_lookup,
     build_comorb_scores,
@@ -20,6 +21,13 @@ def test_cond_lookup_shape(spark):
     assert (chf.elixhauser_wgt, chf.charlson_wgt, chf.gagne_wgt) == (1, 1, 2)
     hiv = df.where("short_name = 'HIVAIDS'").first()
     assert (hiv.elixhauser_wgt, hiv.charlson_wgt, hiv.gagne_wgt) == (1, 6, -1)
+
+
+def test_static_catalogs_are_driver_local(spark):
+    """Both memoized catalogs are Arrow-built ``LocalRelation`` frames:
+    scanning them runs no Python worker tasks."""
+    assert build_comorb_cond_lookup(spark).isLocal()
+    assert _rules_df(spark).isLocal()
 
 
 def test_value_set_known_codes(spark):

@@ -234,16 +234,21 @@ def test_run_mcare_pipeline_end_to_end(spark):
         " rev_cntr string, hcpcs_cd string, hcpcs_1st_mdfr_cd string,"
         " rev_cntr_ide_ndc_upc_num string",
     )
+    refs = dict(
+        ref_xwalk=fx.ref_kc_claim_type_xwalk_mcare(spark),
+        ref_pc_oregon=fx.ref_pc_visit_oregon(spark),
+    )
     result = run_mcare_pipeline(
         enr,
         claim_sources={"inpatient": base},
         line_sources={"inpatient": (base, detail)},
         harmonized_header=fx.raw_mcare_claim_header(spark),
         harmonized_line=fx.raw_mcare_claim_line(spark),
-        ref_xwalk=fx.ref_kc_claim_type_xwalk_mcare(spark),
-        ref_pc_oregon=fx.ref_pc_visit_oregon(spark),
+        **refs,
         strict=False,
     )
+    # every Python-built reference is cached once, by the pipeline
+    assert all(any(df is r for df in result.cached) for r in refs.values())
     expect = {"mcare_elig_demo", "mcare_elig_timevar", "mcare_elig_month",
               "mcare_claim_icdcm_header", "mcare_claim_line",
               "mcare_claim_procedure", "mcare_claim_provider",

@@ -74,6 +74,35 @@ def test_cached_stage_writes_run_one_job_each(spark, tmp_path):
         result.unpersist()
 
 
+def test_each_reference_row_is_computed_once(spark):
+    """The pipeline caches each reference input once per refresh: every
+    row of a Python-built ref_icdcm is evaluated once across the
+    builders, the gates and the writes of every table (6 times each
+    when each reader re-scans the caller's frame)."""
+    icdcm = fx.ref_icdcm_codes(spark)
+    n_rows = len(icdcm.collect())
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(row):
+        seen.add(1)
+        return row
+
+    refs = _mcaid_refs(spark)
+    refs["ref_icdcm"] = spark.createDataFrame(
+        icdcm.rdd.map(tick), icdcm.schema
+    )
+    result = run_mcaid_pipeline(
+        spark, fx.raw_mcaid_elig(spark), fx.raw_mcaid_claim(spark), **refs
+    )
+    try:
+        assert result.failures() == []
+        for df in result.tables.values():
+            df.write.format("noop").mode("overwrite").save()
+    finally:
+        result.unpersist()
+    assert seen.value == n_rows
+
+
 def test_pipeline_strict_qa_raises(spark):
     # duplicate claim-line rows with different dates break line-key
     # uniqueness -> strict gate must stop the load like the reference

@@ -125,3 +125,16 @@ def test_full_assembly_subgroups_and_qa(spark):
     qa = qa_rda_value_set(out)
     assert qa == {"dup_codes": 0, "bad_icd9_len": 0, "bad_ndc_len": 0,
                   "null_condition": 0}
+
+
+def test_no_harms_extra_codes_are_driver_local(spark):
+    """The 66 added codes are an Arrow-built ``LocalRelation``: scanning
+    them runs no Python worker tasks."""
+    from claims_data_spark.tables.rda_value_set import (
+        NO_HARMS_ICD10_CODES,
+        no_harms_extra_codes,
+    )
+
+    extra = no_harms_extra_codes(spark)
+    assert extra.isLocal()
+    assert extra.count() == len(NO_HARMS_ICD10_CODES) == 66

@@ -1,8 +1,8 @@
 """Engine code leaves the shared session as the caller configured it:
 no session-conf writes and no cache entries left behind by the
 dense-id builders, the centroid rankers or the combined claim header;
-the master pipelines' stage caches are owned by their result and
-released by it, also when a strict gate stops the load."""
+the master pipelines' stage and reference caches are owned by their
+result and released by it, also when a strict gate stops the load."""
 
 from __future__ import annotations
 
@@ -121,21 +121,23 @@ def test_combined_claim_header_leaves_no_cached_plans(spark):
 
 def test_pipeline_result_releases_its_stage_cache(spark):
     """run_mcaid_pipeline caches its multiply-read stages and the
-    result's unpersist() releases every one of them."""
+    reference it is given (7 stages plus ref_xwalk), and the result's
+    unpersist() releases every one of them."""
     spark.catalog.clearCache()
     result = run_mcaid_pipeline(
         spark, fx.raw_mcaid_elig(spark), fx.raw_mcaid_claim(spark),
         ref_xwalk=fx.ref_claim_type_xwalk(spark),
     )
     assert result.failures() == []
-    assert len(result.cached) == 7 and not _cache_is_empty(spark)
+    assert len(result.cached) == 8 and not _cache_is_empty(spark)
     result.unpersist()
     assert result.cached == [] and _cache_is_empty(spark)
 
 
 def test_strict_gate_failure_releases_stage_cache(spark):
-    """A strict gate that stops the load releases the stages cached
-    before it: duplicate claim lines fail claim_line's gate after
+    """A strict gate that stops the load releases the stages and the
+    references cached before it: duplicate claim lines fail
+    claim_line's gate after the Python-built ref_xwalk and ref_icdcm,
     elig_demo, elig_timevar and claim_line were cached."""
     spark.catalog.clearCache()
     raw_claim = fx.raw_mcaid_claim(spark)
@@ -148,7 +150,30 @@ def test_strict_gate_failure_releases_stage_cache(spark):
         run_mcaid_pipeline(
             spark, fx.raw_mcaid_elig(spark), dup,
             ref_xwalk=fx.ref_claim_type_xwalk(spark),
+            ref_icdcm=fx.ref_icdcm_codes(spark),
         )
+    assert _cache_is_empty(spark)
+
+
+def test_pipeline_leaves_cached_and_local_references_as_given(spark):
+    """A reference the caller already cached and a driver-local one (a
+    ``LocalRelation``) are used as given: neither is recorded in the
+    result's cache, and both are as the caller left them after
+    ``unpersist()``."""
+    spark.catalog.clearCache()
+    xwalk = fx.ref_claim_type_xwalk(spark).cache()
+    hedis = spark.createDataFrame(fx.ref_hedis(spark).toArrow())
+    assert hedis.isLocal()
+    result = run_mcaid_pipeline(
+        spark, fx.raw_mcaid_elig(spark), fx.raw_mcaid_claim(spark),
+        ref_xwalk=xwalk, ref_hedis=hedis,
+    )
+    assert result.failures() == []
+    assert not any(df is xwalk or df is hedis for df in result.cached)
+    result.unpersist()
+    assert xwalk.storageLevel.useMemory
+    assert not hedis.storageLevel.useMemory and hedis.isLocal()
+    xwalk.unpersist()
     assert _cache_is_empty(spark)
 
 
