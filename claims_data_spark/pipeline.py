@@ -17,12 +17,14 @@ stays a lazy DataFrame.
 
 The reference inputs a caller passes in (the ``ref.*`` lookups the
 reference loads once into SQL tables) follow the same rule: each
-pipeline caches every reference it is given before its first stage
-(:func:`cache_refs`). Builders, gates and writes then scan the cached
-copy instead of re-reading the caller's source, which for a reference
-built from Python rows is a Python-worker task per scan. A reference
-that is already driver-local (``isLocal()``) is left uncached, since
-its scans run no job.
+pipeline caches, before its first stage, every reference that more than
+one scan reads (several builders, a builder's own checkpoint and the
+gate after it, or one builder that joins the lookup several times).
+Those readers then scan the cached copy instead of re-reading the
+caller's source, which for a reference built from Python rows is a
+Python-worker task per scan. A reference read once stays as given, and
+so does one that is already driver-local (``isLocal()``), since its
+scans run no job.
 
 "Promotion" is the caller's choice of writer
 (``sources.io.write_table`` / ``write_bucketed``); QA gates run as
@@ -69,33 +71,27 @@ from claims_data_spark.tables.elig_month import build_elig_month
 from claims_data_spark.tables.elig_timevar import build_elig_timevar
 
 
-def cache_stage(df: DataFrame, held: list[DataFrame]) -> DataFrame:
+def cache_stage(
+    df: DataFrame | None, held: list[DataFrame]
+) -> DataFrame | None:
     """The engine's one stage-cache rule: persist ``df`` at the default
     storage level and record it in ``held``, whose owner unpersists it.
 
-    Applied to every stage read more than once and to every reference
-    input a pipeline is given (:func:`cache_refs`). Without it each
-    reader (the stage's gate, later gates, downstream builders, the
-    writer) re-runs the frame's lineage; with it the first action fills
-    the cache. A persist, not a ``localCheckpoint``: a lost block
-    recomputes from lineage, so the pipeline survives executor loss. A
-    frame the caller has already cached is returned as is and left to
-    its owner, and so is a driver-local frame (``isLocal()``, a
-    ``LocalRelation``): its scans run no job, so a cache would only add
-    one."""
-    if df.storageLevel != StorageLevel.NONE or df.isLocal():
+    Applied to every stage and every reference input read more than
+    once. Without it each reader (the stage's gate, later gates,
+    downstream builders, the writer) re-runs the frame's lineage; with
+    it the first action fills the cache. A persist, not a
+    ``localCheckpoint``: a lost block recomputes from lineage, so the
+    pipeline survives executor loss. A frame the caller has already
+    cached is returned as is and left to its owner, and so is a
+    driver-local frame (``isLocal()``, a ``LocalRelation``): its scans
+    run no job, so a cache would only add one. ``None`` (a reference
+    the caller did not give) is returned as is."""
+    if df is None or df.storageLevel != StorageLevel.NONE or df.isLocal():
         return df
     df = df.persist()
     held.append(df)
     return df
-
-
-def cache_refs(
-    held: list[DataFrame], *refs: DataFrame | None
-) -> list[DataFrame | None]:
-    """:func:`cache_stage` over each reference input, in order; a
-    reference the caller did not give (``None``) stays ``None``."""
-    return [None if r is None else cache_stage(r, held) for r in refs]
 
 
 @dataclass
@@ -159,20 +155,26 @@ def run_mcaid_pipeline(
     master script stops the load and emails), after releasing the
     stages already cached; ``False`` records the results and continues.
     The result holds ``elig_demo``, ``elig_timevar``, the five claim
-    tables and every reference given cached (see :func:`cache_stage`);
-    ``elig_month``, ``claim_ccw`` and ``claim_bh`` are read once and stay
-    lazy.
+    tables and the references read more than once cached (see
+    :func:`cache_stage`); ``elig_month``, ``claim_ccw``, ``claim_bh``,
+    ``ref_rac``, ``ref_address`` and ``ref_geocode`` are read once and
+    stay as they are.
     """
     res = PipelineResult()
     gate = partial(qa_gate, res.qa, strict=strict_qa)
     stage = partial(cache_stage, held=res.cached)
 
     with res.released_on_error():
-        (ref_rac, ref_address, ref_geocode, ref_xwalk, ref_hedis,
-         ref_telehealth, ref_icdcm, ref_rda) = cache_refs(
-            res.cached, ref_rac, ref_address, ref_geocode, ref_xwalk,
-            ref_hedis, ref_telehealth, ref_icdcm, ref_rda,
-        )
+        # claim_header's build-time checkpoint and its gate read the
+        # crosswalk, HEDIS and telehealth codes; ref_icdcm is also read
+        # by the icdcm gate and claim_ccw, and claim_bh joins ref_rda in
+        # five places. ref_rac, ref_address and ref_geocode are read
+        # once, by elig_timevar's cache fill.
+        ref_xwalk = stage(ref_xwalk)
+        ref_hedis = stage(ref_hedis)
+        ref_telehealth = stage(ref_telehealth)
+        ref_icdcm = stage(ref_icdcm)
+        ref_rda = stage(ref_rda)
         demo = stage(build_elig_demo(raw_elig))
         gate("elig_demo", *fused_table_qa(demo, unique_keys=["id_mcaid"]))
 
@@ -297,10 +299,10 @@ def run_mcaid_mcare_pipeline(
 
     The crosswalk, each gated child, both source headers and the
     combined header are read more than once, so each is cached where it
-    is built (:func:`cache_stage`), as is each reference given, and the
-    result owns the cache; the
-    QA gates are the only actions, exactly like the per-source pipeline
-    above, and the first gate over a stage fills its cache.
+    is built (:func:`cache_stage`), as is ``ref_rda``, and the result
+    owns the cache; the QA gates are the only actions, exactly like the
+    per-source pipeline above, and the first gate over a stage fills its
+    cache.
     """
     from claims_data_spark.tables.conditions import (
         build_mcaid_mcare_claim_bh,
@@ -321,7 +323,9 @@ def run_mcaid_mcare_pipeline(
     stage = partial(cache_stage, held=res.cached)
 
     with res.released_on_error():
-        ref_icdcm, ref_rda = cache_refs(res.cached, ref_icdcm, ref_rda)
+        # claim_bh joins ref_rda in five places; ref_icdcm is read once,
+        # by claim_ccw
+        ref_rda = stage(ref_rda)
         # identity linkage (the reference runs this before everything);
         # every later stage joins it
         xwalk = stage(build_xwalk(
@@ -423,8 +427,9 @@ def run_apcd_pipeline(
     eleven-invariant QA suite) -> claim_ccw.  Claim stages are
     skipped when their raw extract is not supplied, mirroring the
     master script's section reruns; PLR builds once per year in
-    ``plr_years`` (the reference's 2014-2024 unrolled calls). Every
-    reference given is cached first (:func:`cache_refs`).
+    ``plr_years`` (the reference's 2014-2024 unrolled calls). The
+    references read more than once are cached first
+    (:func:`cache_stage`).
     """
     from claims_data_spark.tables.apcd import (
         build_apcd_claim_header,
@@ -448,11 +453,16 @@ def run_apcd_pipeline(
     stage = partial(cache_stage, held=res.cached)
 
     with res.released_on_error():
-        (ref_claim_status, ref_xwalk, ref_icdcm, ref_ethnicity_race_map,
-         ref_zip_group, ref_county_code) = cache_refs(
-            res.cached, ref_claim_status, ref_xwalk, ref_icdcm,
-            ref_ethnicity_race_map, ref_zip_group, ref_county_code,
-        )
+        # claim_header's build-time checkpoint and its gate read the
+        # status, crosswalk and ICD-CM lookups (ICD-CM also by several
+        # flag joins and claim_ccw); timevar, elig_month and the PLR
+        # read the geography lookups. ref_ethnicity_race_map is read
+        # once, by elig_demo's cache fill.
+        ref_claim_status = stage(ref_claim_status)
+        ref_xwalk = stage(ref_xwalk)
+        ref_icdcm = stage(ref_icdcm)
+        ref_zip_group = stage(ref_zip_group)
+        ref_county_code = stage(ref_county_code)
         demo = None
         if eligibility is not None:
             demo = stage(build_apcd_elig_demo(
@@ -581,8 +591,8 @@ def run_mcare_pipeline(
     (base_claims, detail) pairs for the line/procedure/pharm grains —
     both exactly the per-builder contracts, so a section is skipped
     when its extract is absent (the master script's rerun pattern).
-    Every reference given, ``oud_dx_codes`` included, is cached first
-    (:func:`cache_refs`).
+    The references read more than once are cached first
+    (:func:`cache_stage`).
     """
     from claims_data_spark.tables.conditions import (
         build_mcare_claim_bh,
@@ -613,11 +623,15 @@ def run_mcare_pipeline(
     stage = partial(cache_stage, held=res.cached)
 
     with res.released_on_error():
-        (ref_geo_kc_zip, ref_xwalk, ref_pc_oregon, ref_icdcm, ref_rda,
-         ref_naloxone_ndc, oud_dx_codes) = cache_refs(
-            res.cached, ref_geo_kc_zip, ref_xwalk, ref_pc_oregon, ref_icdcm,
-            ref_rda, ref_naloxone_ndc, oud_dx_codes,
-        )
+        # the three elig builders read the ZIP lookup; claim_header's
+        # build-time checkpoint and its gate read the crosswalk and the
+        # Oregon primary-care codes; claim_bh joins ref_rda in five
+        # places. ref_icdcm, ref_naloxone_ndc and oud_dx_codes
+        # are each read once, by the one table that joins them.
+        ref_geo_kc_zip = stage(ref_geo_kc_zip)
+        ref_xwalk = stage(ref_xwalk)
+        ref_pc_oregon = stage(ref_pc_oregon)
+        ref_rda = stage(ref_rda)
         demo = stage(build_mcare_elig_demo(
             bene_enrollment, ref_geo_kc_zip=ref_geo_kc_zip
         ))

@@ -14,10 +14,8 @@ from __future__ import annotations
 
 import re
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 _DECIMAL_RE = re.compile(r"^(?:numeric|decimal)\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)$")
 _VARCHAR_RE = re.compile(r"^(?:var)?char\s*\(\s*(\d+|max)\s*\)$")
@@ -78,6 +76,9 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     frame: a ``LocalRelation`` built from an Arrow table of the declared
     types. ``createDataFrame`` of a Python list is a Python RDD instead,
     and every scan of it runs Python worker tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     struct = T.StructType.fromDDL(schema)
     return spark.createDataFrame(pa.Table.from_pylist(
         [dict(zip(struct.names, r)) for r in rows],

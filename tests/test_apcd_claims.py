@@ -254,7 +254,8 @@ def test_run_apcd_pipeline_end_to_end(spark):
         plr_years=[2019],
         strict=False,
     )
-    # every Python-built reference is cached once, by the pipeline
+    # both Python-built references are read more than once (the
+    # header's checkpoint and its gate), so the pipeline caches them
     assert all(any(df is r for df in result.cached) for r in refs.values())
     expect = {"apcd_elig_demo", "apcd_elig_timevar", "apcd_elig_month",
               "apcd_elig_plr_2019", "apcd_claim_header",

@@ -247,7 +247,8 @@ def test_run_mcare_pipeline_end_to_end(spark):
         **refs,
         strict=False,
     )
-    # every Python-built reference is cached once, by the pipeline
+    # both Python-built references are read more than once (the
+    # header's checkpoint and its gate), so the pipeline caches them
     assert all(any(df is r for df in result.cached) for r in refs.values())
     expect = {"mcare_elig_demo", "mcare_elig_timevar", "mcare_elig_month",
               "mcare_claim_icdcm_header", "mcare_claim_line",

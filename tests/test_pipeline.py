@@ -75,32 +75,41 @@ def test_cached_stage_writes_run_one_job_each(spark, tmp_path):
 
 
 def test_each_reference_row_is_computed_once(spark):
-    """The pipeline caches each reference input once per refresh: every
-    row of a Python-built ref_icdcm is evaluated once across the
-    builders, the gates and the writes of every table (6 times each
-    when each reader re-scans the caller's frame)."""
-    icdcm = fx.ref_icdcm_codes(spark)
-    n_rows = len(icdcm.collect())
-    seen = spark.sparkContext.accumulator(0)
+    """Every row of every Python-built reference is evaluated once
+    across the builders, the gates and the writes of every table. The
+    pipeline caches the references read more than once (ref_icdcm's
+    rows were evaluated 6 times when each reader re-scanned the
+    caller's frame) and leaves the three that elig_timevar alone reads
+    as given."""
+    refs = {}
+    seen = {}
+    for name, df in _mcaid_refs(spark).items():
+        if name == "ccw_config":
+            refs[name] = df
+            continue
+        acc = spark.sparkContext.accumulator(0)
+        seen[name] = (acc, len(df.collect()))
 
-    def tick(row):
-        seen.add(1)
-        return row
+        def tick(row, acc=acc):
+            acc.add(1)
+            return row
 
-    refs = _mcaid_refs(spark)
-    refs["ref_icdcm"] = spark.createDataFrame(
-        icdcm.rdd.map(tick), icdcm.schema
-    )
+        refs[name] = spark.createDataFrame(df.rdd.map(tick), df.schema)
     result = run_mcaid_pipeline(
         spark, fx.raw_mcaid_elig(spark), fx.raw_mcaid_claim(spark), **refs
     )
     try:
         assert result.failures() == []
+        read_once = {"ref_rac", "ref_address", "ref_geocode"}
+        assert {n for n in seen if any(df is refs[n] for df in result.cached)
+                } == set(seen) - read_once
         for df in result.tables.values():
             df.write.format("noop").mode("overwrite").save()
     finally:
         result.unpersist()
-    assert seen.value == n_rows
+    assert {n: acc.value for n, (acc, _) in seen.items()} == {
+        n: rows for n, (_, rows) in seen.items()
+    }
 
 
 def test_pipeline_strict_qa_raises(spark):
